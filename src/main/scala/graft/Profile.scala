@@ -17,8 +17,8 @@ object Profile {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark.range(1 << 20).selectExpr("sum(id * 2)").collect()
-    // runs 1-3 drop the cache first (Bench's conditions: codegen-warm
-    // after run1, cache-cold); runs 4-5 keep it (steady-state)
+    // runs 1-3 drop the cache first (codegen-warm after run1,
+    // cache-cold); runs 4-5 keep it (steady-state)
     for (name <- names; i <- 1 to 5) {
       if (i <= 3) spark.sharedState.cacheManager.clearCache()
       val t0 = System.nanoTime()

@@ -26,7 +26,7 @@ object ScaleSmoke {
       .config("spark.ui.enabled", "false")
       // fresh per-run warehouse (see [[BenchWarehouse]]): K=20 index
       // builds write GBs of managed tables — they must not pile up in
-      // cwd's spark-warehouse across runs or leak into Bench's state
+      // cwd's spark-warehouse across runs or leak into Verify's state
       .config("spark.sql.warehouse.dir", BenchWarehouse.freshDir("scale"))
       // a K=20 session accumulates tens of GB of shuffle files across
       // ~50 timed blocks; they are only reclaimed when their

@@ -71,7 +71,7 @@ object Verify {
       }
       // several operators persist intermediates the returned plan still
       // references; left alone they accumulate across the ~100-query
-      // dump and squeeze execution memory (same pathology Bench clears)
+      // dump and squeeze execution memory
       spark.sharedState.cacheManager.clearCache()
     }
     pool.shutdownNow()
@@ -111,13 +111,12 @@ object Verify {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       // fresh per-run warehouse (see [[BenchWarehouse]]): a Verify run
-      // must not inherit index tables a prior run/round left in cwd's
-      // spark-warehouse, nor leave 100s of MB behind for Bench to
-      // trip over
+      // must not inherit index tables a prior run left in cwd's
+      // spark-warehouse, nor leave 100s of MB behind
       .config("spark.sql.warehouse.dir", BenchWarehouse.freshDir("verify"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // per-query wall-clock budget (mirrors Bench): one pathological
+    // per-query wall-clock budget: one pathological
     // plan cannot stall the whole correctness dump
     val timeoutSec = sys.env.getOrElse("SPARK_GRAFT_QUERY_TIMEOUT_SEC", "300").toLong
     val selected = SparkEntry.queries.toSeq

@@ -734,7 +734,6 @@ object Dedup {
     var it = 0
     var converged = false
     while (it < maxIter && !converged) {
-      val t0 = System.nanoTime()
       val prop = und.join(labels.withColumnRenamed("id", "src"), Seq("src"))
         .groupBy(col("dst").as("id")).agg(min(col("component")).as("nbr"))
       // localCheckpoint (eager), not persist: each round's plan embeds
@@ -749,11 +748,6 @@ object Dedup {
           least(col("component"), coalesce(col("nbr"), col("component"))).as("component"))
         .localCheckpoint(true)
       val nextSum = labelSum(next)
-      // scale-row instrumentation only (SCALE.md convergence notes);
-      // silent in query/bench runs
-      if (sys.env.contains("SPARK_GRAFT_CC_LOG"))
-        println(f"[cc] round ${it + 1}%d: labelSum $nextSum%d " +
-          f"(${(System.nanoTime() - t0) / 1e9}%.2f s)")
       labels.unpersist()
       labels = next
       converged = nextSum == prevSum

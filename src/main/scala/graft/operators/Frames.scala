@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.slf4j.LoggerFactory
+
+import graft.util.Actions
 
 /** Frame-level operators (SURVEY.md §2.6-2.8, §2.2).
   *
@@ -13,8 +14,6 @@ import org.slf4j.LoggerFactory
   * materializes for (limit-with-warning, RDF sink).
   */
 object Frames {
-
-  private val log = LoggerFactory.getLogger(getClass)
 
   /** Global window over a frame that is PROVABLY TINY (an already-
     * aggregated histogram, a per-bucket totals table, a topK slice —
@@ -850,8 +849,8 @@ object Frames {
     val total = df.count()
     if (total <= n) df
     else {
-      log.warn(s"LimitWarning: result has $total rows, capping to $n" +
-        (if (sample) " (sampled)" else ""))
+      Actions.warn(s"result has $total rows, capping to $n" +
+        (if (sample) " (sampled)" else ""), Actions.LimitWarning)
       if (sample) idCol match {
         // with a unique id the sample key is the portable hash, so an
         // external oracle reproduces the sampled rows
@@ -863,16 +862,22 @@ object Frames {
 
   /** RDF statement sink (polars_utils.py:106-123
     * `print_rdf_statements`): assert single-string-column schema,
-    * apply the soft cap, print each statement. Driver-side by design
-    * — the cap bounds the collect at 250 rows.
+    * apply the soft cap, print each statement. One Spark action: an
+    * ordered take of `limit + 1` rows (the [[sampleExact]] order, or
+    * the frame's own with `sample = false`) both bounds the collect
+    * and tells whether the frame was over the cap, so every upstream
+    * side effect (the TMDB API calls) runs exactly once.
     */
   def printRdfStatements(df: DataFrame, limit: Int = 250, sample: Boolean = true,
                          out: java.io.PrintStream = System.out): Unit = {
     require(df.columns.sameElements(Array("rdf_statement")) &&
       df.schema.head.dataType == org.apache.spark.sql.types.StringType,
       s"print_rdf_statements expects schema {rdf_statement: string}, got ${df.schema}")
-    limitWithWarning(df, limit, sample).collect()
-      .foreach(r => out.println(r.getString(0)))
+    val rows = (if (sample) sampleExact(df, limit + 1, 42L) else df.limit(limit + 1)).collect()
+    if (rows.length > limit)
+      Actions.warn(s"result has more than $limit rows, capping to $limit" +
+        (if (sample) " (sampled)" else ""), Actions.LimitWarning)
+    rows.take(limit).foreach(r => out.println(r.getString(0)))
   }
 
   /** Scale-path RDF sink: same schema contract, but writes a text

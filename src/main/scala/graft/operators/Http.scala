@@ -6,6 +6,7 @@ import org.apache.spark.sql.types._
 import org.slf4j.LoggerFactory
 
 import graft.functions.ColumnOps.fmt
+import graft.util.Actions
 
 /** The reference engine's signature design: HTTP modeled as columnar
   * expressions over nested struct columns (polars_requests.py:49-66,
@@ -15,18 +16,20 @@ import graft.functions.ColumnOps.fmt
   *
   * Spark-first translation:
   *  - `prepareRequest`/`responseText` stay pure Column expressions.
-  *  - `request` is a `mapPartitions` transform — the direct analog of
-  *    the reference's `map_batches` boundary: per-partition client
-  *    session, strictly sequential within a partition, per-request
-  *    rate floor, retry with exponential backoff, status
-  *    classification. mapPartitions is also an analysis barrier, so
-  *    Catalyst can never push a filter past the side-effecting HTTP
-  *    call or duplicate it across projections (SURVEY.md §4.1).
-  *  - Aggregate request rate = partitions × sequential rate; the
-  *    `parallelism` knob repartitions (parallelism=1 reproduces the
-  *    reference's single sequential loop exactly — SURVEY.md §3.3).
+  *  - `request` is a `mapPartitions` transform over ONE partition —
+  *    the direct analog of the reference's single `map_batches` loop:
+  *    one client session, strictly sequential, per-request rate
+  *    floor, retry with exponential backoff, status classification,
+  *    batch cap. One partition makes the pacing and the cap global.
+  *    mapPartitions is also an analysis barrier, so Catalyst can
+  *    never push a filter past the side-effecting HTTP call or
+  *    duplicate it across projections (SURVEY.md §4.1).
+  *  - [[retrying]] is the one backoff loop of the I/O path; the
+  *    SPARQL source retries through it too.
   */
 object Http {
+
+  private val log = LoggerFactory.getLogger("graft.http")
 
   val HeaderType: StructType = StructType(Seq(
     StructField("name", StringType), StructField("value", StringType)))
@@ -118,25 +121,20 @@ object Http {
 
   /** Execute the requests in `requestCol`, appending `responseCol`.
     *
-    * Per-partition semantics mirror the reference's per-batch
-    * semantics (polars_requests.py:90-170): one transport session,
-    * sequential ordered loop, per-request `minTime` floor (sleep the
-    * remainder), exponential-backoff retry on bad/unknown statuses
-    * and transport errors, warning when a retried request's status
-    * changes, hard cap on requests per partition. Null/empty URL →
-    * null response, no network call.
+    * Mirrors the reference's batch loop (polars_requests.py:90-170):
+    * one transport session, sequential ordered loop, per-request
+    * `minTime` floor (sleep the remainder), exponential-backoff retry
+    * on bad/unknown statuses and transport errors, warning when a
+    * retried request's status changes, hard cap on requests per
+    * batch. Null/empty URL → null response, no network call.
     */
   def request(df: DataFrame, requestCol: String, opts: Options,
               transport: Transport = JdkTransport,
-              responseCol: String = "response",
-              parallelism: Option[Int] = None): DataFrame = {
-    val in = parallelism.fold(df)(n => df.repartition(n))
-    val schema = in.schema
-    val reqIdx = schema.fieldIndex(requestCol)
-    val outSchema = schema.add(StructField(responseCol, ResponseType))
+              responseCol: String = "response"): DataFrame = {
+    val reqIdx = df.schema.fieldIndex(requestCol)
+    val outSchema = df.schema.add(StructField(responseCol, ResponseType))
     val o = opts
-    in.mapPartitions { rows =>
-      val log = LoggerFactory.getLogger("graft.http")
+    df.repartition(1).mapPartitions { rows =>
       log.info(s"::group::${o.logGroup}")
       var count = 0L
       rows.map { row =>
@@ -150,45 +148,46 @@ object Http {
             val headers: Seq[(String, String)] =
               if (req.isNullAt(1)) Nil
               else req.getSeq[Row](1).map(h => (h.getString(0), h.getString(1)))
-            var attempt = 0
             var previousStatus: Option[Int] = None
-            var result: Exchange = null
-            var done = false
-            while (!done) {
-              attempt += 1
+            val ex = retrying(math.max(1, o.retryCount), o.maxRetrySleepMs) {
               val t0 = System.nanoTime()
-              try {
-                val ex = transport.get(url, headers, o.timeoutMs)
-                previousStatus.filter(_ != ex.status).foreach { p =>
-                  if (!o.badStatuses.contains(p))
-                    log.warn(s"::warning title=StatusCodeWarning::Retried $p -> ${ex.status}")
-                }
-                previousStatus = Some(ex.status)
-                val elapsedMs = (System.nanoTime() - t0) / 1000000L
-                val sleepMs = o.minTimeMs - elapsedMs
-                if (sleepMs > 0) Thread.sleep(sleepMs)
-                if (o.okStatuses.contains(ex.status)) {
-                  result = ex; done = true
-                } else {
-                  if (!o.badStatuses.contains(ex.status))
-                    log.warn(s"::warning title=StatusCodeWarning::Unknown status code: ${ex.status}")
-                  throw new java.io.IOException(s"HTTP ${ex.status} for $url")
-                }
-              } catch {
-                case e: Exception if attempt < math.max(1, o.retryCount) =>
-                  val backoffMs = math.min(1000L * (1L << math.min(attempt - 1, 20)),
-                    o.maxRetrySleepMs)
-                  log.info(s"retrying (${e.getMessage}) in ${backoffMs}ms")
-                  Thread.sleep(backoffMs)
-                case e: Exception => throw e
+              val ex = transport.get(url, headers, o.timeoutMs)
+              previousStatus.filter(p => p != ex.status && !o.badStatuses.contains(p))
+                .foreach(p => Actions.warn(s"Retried $p -> ${ex.status}", Actions.StatusCodeWarning))
+              previousStatus = Some(ex.status)
+              val sleepMs = o.minTimeMs - (System.nanoTime() - t0) / 1000000L
+              if (sleepMs > 0) Thread.sleep(sleepMs)
+              if (!o.okStatuses.contains(ex.status)) {
+                if (!o.badStatuses.contains(ex.status))
+                  Actions.warn(s"Unknown status code: ${ex.status}", Actions.StatusCodeWarning)
+                throw new java.io.IOException(s"HTTP ${ex.status} for $url")
               }
+              ex
             }
-            Row(result.status,
-              result.headers.map { case (n, v) => Row(n, v) },
-              result.data)
+            Row(ex.status, ex.headers.map { case (n, v) => Row(n, v) }, ex.data)
           }
         Row.fromSeq(row.toSeq :+ resp)
       }
     }(Encoders.row(outSchema))
+  }
+
+  /** Evaluates `body` up to `tries` times (at least once), sleeping
+    * 1 s, 2 s, 4 s, ... capped at `maxSleepMs` after each failure; the
+    * last failure propagates (polars_requests.py:80-85, sparql.py:21-26).
+    */
+  private[graft] def retrying[T](tries: Int, maxSleepMs: Long)(body: => T): T = {
+    var attempt = 1
+    var out: Option[T] = None
+    while (out.isEmpty) {
+      try out = Some(body)
+      catch {
+        case e: Exception if attempt < tries =>
+          val sleepMs = math.min(1000L << math.min(attempt - 1, 20), maxSleepMs)
+          log.info(s"retrying (${e.getMessage}) in ${sleepMs}ms")
+          Thread.sleep(sleepMs)
+          attempt += 1
+      }
+    }
+    out.get
   }
 }

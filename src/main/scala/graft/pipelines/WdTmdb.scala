@@ -22,8 +22,7 @@ object WdTmdb {
       apiBase: String,                  // https://api.themoviedb.org or a stub
       apiKey: String,
       transport: Http.Transport,
-      blockedQids: Seq[String],
-      httpParallelism: Option[Int] = Some(1))  // reference = one sequential loop
+      blockedQids: Seq[String])
 
   val ImdbIdPattern: Map[String, String] = Map(
     "movie" -> "tt(\\d+)", "tv" -> "tt(\\d+)", "person" -> "nm(\\d+)")
@@ -58,7 +57,7 @@ object WdTmdb {
     Http.request(prepared, "request",
         Http.Options(logGroup = s"tmdb/find", okStatuses = Set(200, 404),
           retryCount = 3),
-        src.transport, parallelism = src.httpParallelism)
+        src.transport)
       .withColumn("tmdb_id",
         from_json(Http.responseText(col("response")), FindResponseSchema)
           .getField(s"${tmdbType}_results")
@@ -77,7 +76,7 @@ object WdTmdb {
     Http.request(prepared, "request",
         Http.Options(logGroup = s"tmdb/$tmdbType", okStatuses = Set(200, 404),
           retryCount = 3),
-        src.transport, parallelism = src.httpParallelism)
+        src.transport)
       .withColumn(existsCol,
         from_json(Http.responseText(col("response")),
           StructType(Seq(StructField("id", LongType))))

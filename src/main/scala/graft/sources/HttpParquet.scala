@@ -18,6 +18,9 @@ import org.slf4j.LoggerFactory
 object HttpParquet {
 
   private val log = LoggerFactory.getLogger(getClass)
+  private val Timeout = java.time.Duration.ofSeconds(60)
+  private lazy val client = java.net.http.HttpClient.newBuilder()
+    .followRedirects(java.net.http.HttpClient.Redirect.NORMAL).build()
 
   def cacheDir: java.nio.file.Path = {
     val p = java.nio.file.Paths.get(
@@ -29,17 +32,14 @@ object HttpParquet {
   /** Fetch `url` to the local cache (keyed by URL hash; re-fetched
     * only when absent or `refresh`), then parquet-scan it.
     */
-  def read(spark: SparkSession, url: String, refresh: Boolean = false,
-           timeoutMs: Int = 60000): DataFrame = {
+  def read(spark: SparkSession, url: String, refresh: Boolean = false): DataFrame = {
     val key = java.security.MessageDigest.getInstance("SHA-256")
       .digest(url.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(32)
     val target = cacheDir.resolve(s"$key.parquet")
     if (refresh || !java.nio.file.Files.exists(target)) {
       log.info(s"fetching $url -> $target")
-      val client = java.net.http.HttpClient.newBuilder()
-        .followRedirects(java.net.http.HttpClient.Redirect.NORMAL).build()
       val req = java.net.http.HttpRequest.newBuilder(java.net.URI.create(url))
-        .timeout(java.time.Duration.ofMillis(timeoutMs)).GET().build()
+        .timeout(Timeout).GET().build()
       val resp = client.send(req, java.net.http.HttpResponse.BodyHandlers.ofByteArray())
       require(resp.statusCode() == 200, s"HTTP ${resp.statusCode()} fetching $url")
       val tmp = java.nio.file.Files.createTempFile(cacheDir, key, ".part")

@@ -4,6 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 import org.slf4j.LoggerFactory
 
+import graft.operators.Http
+import graft.util.Actions
+
 /** SPARQL endpoint → DataFrame source (sparql.py:21-90).
   *
   * The reference sends exactly one query per frame, driver-side, and
@@ -19,37 +22,38 @@ object Sparql {
   /** query → raw CSV bytes; pluggable so tests use canned fixtures. */
   type Fetch = String => Array[Byte]
 
+  /** Deployment settings; the retry and timeout envelope is the
+    * reference's and fixed (sparql.py:21-48).
+    */
   final case class Config(
       endpoint: String = "https://query.wikidata.org/sparql",
-      userAgent: String = s"GraftBot/1.0 Scala/${util.Properties.versionNumberString}",
-      maxTries: Int = 30,
-      maxIntervalSec: Int = 120,
-      connectTimeoutMs: Int = 1000,
-      readTimeoutMs: Int = 90000,
-      slowLogSec: Double = 5.0,
-      slowWarnSec: Double = 45.0)
+      userAgent: String = s"GraftBot/1.0 Scala/${util.Properties.versionNumberString}")
+
+  private val MaxTries = 30
+  private val MaxIntervalMs = 120000L
+  private val ConnectTimeout = java.time.Duration.ofSeconds(1)
+  private val ReadTimeout = java.time.Duration.ofSeconds(90)
+  private val SlowLogSec = 5.0
+  private val SlowWarnSec = 45.0
 
   private val log = LoggerFactory.getLogger(getClass)
 
-  /** Driver-side POST with the reference's retry envelope. */
-  def httpFetch(cfg: Config = Config()): Fetch = { query =>
-    val client = java.net.http.HttpClient.newBuilder()
-      .connectTimeout(java.time.Duration.ofMillis(cfg.connectTimeoutMs))
-      .build()
-    var attempt = 0
-    var out: Array[Byte] = null
-    while (out == null) {
-      attempt += 1
-      val t0 = System.nanoTime()
-      try {
-        val body = "query=" + java.net.URLEncoder.encode(query, "UTF-8")
-        val req = java.net.http.HttpRequest.newBuilder(java.net.URI.create(cfg.endpoint))
-          .timeout(java.time.Duration.ofMillis(cfg.readTimeoutMs))
-          .header("Accept", "text/csv")
-          .header("User-Agent", cfg.userAgent)
-          .header("Content-Type", "application/x-www-form-urlencoded")
-          .POST(java.net.http.HttpRequest.BodyPublishers.ofString(body))
-          .build()
+  /** POST on the calling thread with the reference's retry envelope;
+    * one client per returned Fetch.
+    */
+  def httpFetch(cfg: Config = Config()): Fetch = {
+    val client = java.net.http.HttpClient.newBuilder().connectTimeout(ConnectTimeout).build()
+    query => {
+      val req = java.net.http.HttpRequest.newBuilder(java.net.URI.create(cfg.endpoint))
+        .timeout(ReadTimeout)
+        .header("Accept", "text/csv")
+        .header("User-Agent", cfg.userAgent)
+        .header("Content-Type", "application/x-www-form-urlencoded")
+        .POST(java.net.http.HttpRequest.BodyPublishers.ofString(
+          "query=" + java.net.URLEncoder.encode(query, "UTF-8")))
+        .build()
+      Http.retrying(MaxTries, MaxIntervalMs) {
+        val t0 = System.nanoTime()
         val r = client.send(req, java.net.http.HttpResponse.BodyHandlers.ofByteArray())
         val text = new String(r.body(), java.nio.charset.StandardCharsets.UTF_8)
         // WDQS quirk: timeouts surface as 200s with an embedded Java
@@ -59,19 +63,12 @@ object Sparql {
         if (r.statusCode() >= 400)
           throw new java.io.IOException(s"HTTP ${r.statusCode()}")
         val duration = (System.nanoTime() - t0) / 1e9
-        if (duration > cfg.slowWarnSec)
-          log.warn(f"::warning title=SlowQueryWarning::sparql: $duration%,.2fs")
-        else if (duration > cfg.slowLogSec) log.info(f"sparql: $duration%,.2fs")
-        out = r.body()
-      } catch {
-        case e: Exception if attempt < cfg.maxTries =>
-          val backoffSec = math.min(1L << math.min(attempt - 1, 20), cfg.maxIntervalSec.toLong)
-          log.info(s"sparql retry ${e.getMessage}; sleeping ${backoffSec}s")
-          Thread.sleep(backoffSec * 1000)
-        case e: Exception => throw e
+        if (duration > SlowWarnSec)
+          Actions.warn(f"sparql: $duration%,.2fs", Actions.SlowQueryWarning)
+        else if (duration > SlowLogSec) log.info(f"sparql: $duration%,.2fs")
+        r.body()
       }
     }
-    out
   }
 
   /** Declared-schema SPARQL source. Columns-only form defaults every

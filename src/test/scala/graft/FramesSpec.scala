@@ -89,6 +89,18 @@ class FramesSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] { Frames.printRdfStatements(bad) }
   }
 
+  test("printRdfStatements caps an over-limit frame to its seeded sample, warning once") {
+    val df = (1 to 37).map(i => s"wd:Q$i wdt:P1 \"$i\" .").toDF("rdf_statement")
+    val before = graft.util.Actions.recentWarnings()
+    val bout = new java.io.ByteArrayOutputStream()
+    Frames.printRdfStatements(df, limit = 10, out = new java.io.PrintStream(bout))
+    val printed = bout.toString("UTF-8").split("\n").filter(_.nonEmpty).toSeq
+    assert(printed.size === 10)
+    assert(printed.toSet === Frames.sampleExact(df, 10, 42L).collect().map(_.getString(0)).toSet)
+    val emitted = graft.util.Actions.recentWarnings().filterNot(w => before.exists(_ eq w))
+    assert(emitted.count(_.category == "LimitWarning") === 1)
+  }
+
   test("packSequences: two-level prefix sum equals single-window, invariants hold") {
     import org.apache.spark.sql.expressions.Window
     val df = (1L to 500L).map(i => (i, (i * 37 % 90))).toDF("id", "n_tok")

@@ -98,6 +98,18 @@ class HttpSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(elapsedMs >= 600, s"two paced requests took only ${elapsedMs}ms")
   }
 
+  test("pacing and the batch guard are global: no caller coalesce needed") {
+    val paced = req((1 to 8).map(i => Some(s"${stub.base}/get?p=$i"))).repartition(4)
+    val t0 = System.nanoTime()
+    Http.request(paced, "request", Http.Options(minTimeMs = 200)).collect()
+    val elapsedMs = (System.nanoTime() - t0) / 1000000
+    assert(elapsedMs >= 1600, s"eight paced requests took only ${elapsedMs}ms")
+    val spread = req((1 to 5).map(i => Some(s"${stub.base}/get?g=$i"))).repartition(4)
+    intercept[org.apache.spark.SparkException] {
+      Http.request(spread, "request", Http.Options(maxBatchSize = 3)).collect()
+    }
+  }
+
   test("per-partition batch guard trips") {
     val df = req((1 to 5).map(i => Some(s"${stub.base}/get?i=$i"))).coalesce(1)
     intercept[org.apache.spark.SparkException] {

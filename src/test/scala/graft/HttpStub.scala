@@ -20,6 +20,8 @@ class HttpStub {
   private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
   private val statusCounters = TrieMap.empty[String, AtomicInteger]
   val requestCount = new AtomicInteger(0)
+  /** path?query of every request received, in arrival order. */
+  val requestLog = new java.util.concurrent.ConcurrentLinkedQueue[String]()
   @volatile var lastHeaders: Map[String, String] = Map.empty
 
   // fixture truths from the reference's own tests (test_wd_tmdb.py:38-86)
@@ -62,6 +64,7 @@ class HttpStub {
     requestCount.incrementAndGet()
     val path = ex.getRequestURI.getPath
     val query = Option(ex.getRequestURI.getRawQuery).getOrElse("")
+    requestLog.add(s"$path?$query")
     val it = ex.getRequestHeaders.entrySet().iterator()
     val hdrs = Map.newBuilder[String, String]
     while (it.hasNext) { val e = it.next(); hdrs += (e.getKey -> e.getValue.get(0)) }

@@ -165,4 +165,15 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(lines.count(_.contains("wdt:P4983")) === 1)
     assert(lines.count(_.contains("DeprecatedRank")) === 1)
   }
+
+  test("printing the full tmdb pipeline issues each API request exactly once") {
+    val all = WdTmdb.fullPipeline(spark, sources)
+    val before = stub.requestCount.get()
+    stub.requestLog.clear()
+    graft.operators.Frames.printRdfStatements(all,
+      out = new java.io.PrintStream(new java.io.ByteArrayOutputStream()))
+    val distinct = stub.requestLog.toArray.distinct.length
+    assert(distinct > 0)
+    assert(stub.requestCount.get() - before === distinct)
+  }
 }

@@ -672,8 +672,7 @@ class PlanShapeSpec extends AnyFunSuite {
       // the derived-language flagship is the identical composition
       // (stage (C)'s seed label comes from the trained char-3-gram
       // classifier — a map-only scoring join, no new window) — the
-      // same two bounded v3 windows, verified by plan diff
-      // (plans/r15/q_curation_v{3,4}_green_check.txt: identical
+      // same two bounded v3 windows, verified by plan diff (identical
       // Window operator sets). The interrupted build round added the
       // query without extending this allowlist.
       "q_curation_v4" -> 2,
