@@ -41,8 +41,8 @@ object PipelineQueries {
   private val ddMidC: String =
     graft.operators.Quantiles.sqlDouble(100.0 * 2.0 / (1.0 + ddGamma))
 
-  /** The round-8 flagship composition, parameterized by corpus so
-    * ScaleSmoke can drive it on replicated data: source health gate ->
+  /** The round-8 flagship composition, parameterized by corpus so it
+    * can run on replicated data: source health gate ->
     * Gopher rule + repetition gates -> trained-quality median keep ->
     * one LSH closure feeding canonical dedup AND the leakage-safe
     * split -> deterministic shuffle + sequence packing. `raw` needs
@@ -891,7 +891,7 @@ object PipelineQueries {
     // ---- near-dup dedup keeping the best-QUALITY doc per cluster
     //      (curation-grade survivor choice; argmax aggregate, no
     //      window). Pair DISCOVERY is MinHash-LSH banding — the
-    //      100 TB play (SCALE.md): candidates only from band-bucket
+    //      100 TB play: candidates only from band-bucket
     //      collisions, exact Jaccard verified on that bounded set,
     //      never all-pairs (exact-pair discovery measured 61-155x at
     //      20x corpus). bands=32/r=2, NOT 16/4: the S-curve midpoint
@@ -966,7 +966,7 @@ object PipelineQueries {
     //      the exact verify. The %7 slice keeps the d=2 output
     //      bench-sized (the FULL-corpus d=2 pair set is genuinely
     //      ~quadratic in lookalikes — 4M pairs at sf0.1, a 2-minute
-    //      row; ScaleSmoke r14 measures that full-corpus form) and,
+    //      row) and,
     //      unlike a %5/%10 slice, keeps LAST-digit variety so the
     //      reversed prefix retains its leading entropy ----
     "dedup_edit_join_pruned" -> ((s, d) =>
@@ -1171,8 +1171,7 @@ object PipelineQueries {
 
     // ---- IVF ANN (coarse-quantizer scale path; recall in ScalaTest).
     //      Cell count follows the sqrt sizing law — fixed cells make
-    //      self-ANN quadratic (measured 4.3x slower at 10x corpus in
-    //      ScaleSmoke/SCALE.md) ----
+    //      self-ANN quadratic (measured 4.3x slower at 10x corpus) ----
     //      Portable training (hash init + exact integer mean updates)
     //      lets the oracle retrain the identical centroids and replay
     //      assignment, probing and ranking — k-means included ----

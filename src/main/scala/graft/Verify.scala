@@ -95,6 +95,18 @@ object Verify {
     Files.writeString(Paths.get(path),
       m.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))
 
+  /** An empty warehouse dir under java.io.tmpdir, deleted on JVM exit. */
+  private def freshWarehouseDir(): String = {
+    val p = Files.createTempDirectory("graft_wh_verify_")
+    sys.addShutdownHook {
+      def rm(f: java.io.File): Unit = {
+        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
+      }
+      rm(p.toFile)
+    }
+    p.toString
+  }
+
   def main(args: Array[String]): Unit = {
     // args: <sfDir> <outDir> [comma-separated query subset]
     // (the driver passes two; the subset is a local iteration aid and
@@ -110,10 +122,10 @@ object Verify {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      // fresh per-run warehouse (see [[BenchWarehouse]]): a Verify run
-      // must not inherit index tables a prior run left in cwd's
-      // spark-warehouse, nor leave 100s of MB behind
-      .config("spark.sql.warehouse.dir", BenchWarehouse.freshDir("verify"))
+      // fresh per-run warehouse: a Verify run must not inherit index
+      // tables a prior run left in cwd's spark-warehouse, nor leave
+      // 100s of MB behind
+      .config("spark.sql.warehouse.dir", freshWarehouseDir())
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // per-query wall-clock budget: one pathological

@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XxHash64Function}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -326,8 +327,9 @@ case class LangProfileScores(child: Expression, profiles: Seq[Seq[Long]],
   * the per-window slice array and the per-window join string Column
   * chain — the dominant map-side cost of the duplicated-span
   * detector/cutter (one MD5 per token position over the whole
-  * corpus). Shorter-than-w arrays yield an empty array (the callers'
-  * `when(size >= w, …)` guard, folded in).
+  * corpus). Null and shorter-than-w arrays yield an empty array (the
+  * callers' `when(size >= w, …).otherwise(array())` guard, folded in),
+  * so the result is never null.
   */
 case class WindowAnchorHashes(child: Expression, w: Int)
     extends UnaryExpression with SelfComputeCodegen {
@@ -335,13 +337,15 @@ case class WindowAnchorHashes(child: Expression, w: Int)
   require(w >= 1, "window width must be >= 1")
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = true
+  // Not nullable: generated code then calls `compute` on a null child
+  // too, passing the array type's default value, null.
+  override def nullable: Boolean = false
   override def prettyName: String = "window_anchor_hashes"
 
   private val HexChars = "0123456789abcdef".toCharArray
 
   def compute(arr: ArrayData): ArrayData = {
-    val n = arr.numElements()
+    val n = if (arr == null) 0 else arr.numElements()
     if (n < w) return new GenericArrayData(Array.empty[Any])
     val toks = new Array[Array[Byte]](n)
     var i = 0
@@ -379,7 +383,8 @@ case class WindowAnchorHashes(child: Expression, w: Int)
     new GenericArrayData(out)
   }
 
-  override def nullSafeEval(v: Any): Any = compute(v.asInstanceOf[ArrayData])
+  override def eval(input: InternalRow): Any =
+    compute(child.eval(input).asInstanceOf[ArrayData])
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -387,7 +392,8 @@ case class WindowAnchorHashes(child: Expression, w: Int)
 
 /** Occurrence counts of a LITERAL term list over an array<string> of
   * tokens, one hashmap pass: out(i) = count of tokens equal to
-  * terms(i). Bit-identical to `size(filter(ts, t -> t = term))` per
+  * terms(i), a repeated term counted at each of its positions.
+  * Bit-identical to `size(filter(ts, t -> t = term))` per
   * term (null tokens never match — SQL equality), but that HOF chain
   * re-walks the token array once per (probe, term); a BM25 gate panel
   * probes tens of terms, so the per-doc cost was O(terms · len)
@@ -402,11 +408,10 @@ case class TermFreqs(child: Expression, terms: Seq[String])
   override def nullable: Boolean = true
   override def prettyName: String = "term_freqs"
 
-  @transient private lazy val idx: java.util.HashMap[String, Integer] = {
-    val m = new java.util.HashMap[String, Integer](terms.length * 2)
-    terms.zipWithIndex.foreach { case (t, i) =>
-      if (!m.containsKey(t)) m.put(t, i)
-    }
+  // term -> every index it holds in `terms`
+  @transient private lazy val idx: java.util.HashMap[String, Array[Int]] = {
+    val m = new java.util.HashMap[String, Array[Int]](terms.length * 2)
+    terms.indices.groupBy(terms).foreach { case (t, is) => m.put(t, is.toArray) }
     m
   }
 
@@ -416,8 +421,14 @@ case class TermFreqs(child: Expression, terms: Seq[String])
     var i = 0
     while (i < n) {
       if (!arr.isNullAt(i)) {
-        val j = idx.get(arr.getUTF8String(i).toString)
-        if (j != null) counts(j) += 1
+        val js = idx.get(arr.getUTF8String(i).toString)
+        if (js != null) {
+          var k = 0
+          while (k < js.length) {
+            counts(js(k)) += 1
+            k += 1
+          }
+        }
       }
       i += 1
     }

@@ -187,35 +187,6 @@ object Bloom {
       .drop("__d_idx", "__d_mask", "idx", "word")
   }
 
-  /** Bitwise OR of two digest word arrays built at the SAME (mBits,
-    * kHashes): because each key's word contributions are a pure
-    * function of (key, mBits, kHashes), the union of a stored digest
-    * with a digest built from only the DELTA's keys is bit-for-bit
-    * the digest a full rebuild over base ∪ delta would produce. This
-    * is what makes index appends O(delta): the full key column is
-    * re-scanned only when [[Retrieval.digestSizing]] crosses a
-    * power-of-two resize boundary (amortized log-many times ever).
-    */
-  def orUnionWords(a: Array[Long], b: Array[Long]): Array[Long] = {
-    require(a.length == b.length,
-      s"digest union needs same-sized word arrays (${a.length} vs ${b.length})" +
-        " — a size mismatch means the digests were built at different mBits" +
-        " and must be rebuilt, not unioned")
-    Array.tabulate(a.length)(i => a(i) | b(i))
-  }
-
-  /** Map-only membership probe of [[buildLongKeyBloom]]'s digest:
-    * true = POSSIBLY present (false positives at the sized rate),
-    * false = DEFINITELY absent — the one-sided answer that makes the
-    * digest a sound prefilter for exact confirmation.
-    */
-  def longKeyBloomMayContain(key: Column, words: Array[Long], mBits: Int,
-                             kHashes: Int): Column = {
-    checkParams(mBits, kHashes)
-    NativeFunctions.bloomShingleHits(array(key.cast("long")), words,
-      mBits, kHashes) > 0
-  }
-
   /** Per-doc contamination card, entirely map-only: (id, n_shingles,
     * n_hits, contaminated). `n_hits` counts the doc's distinct
     * shingles whose k Bloom bits are all set; `contaminated` is the

@@ -43,7 +43,7 @@ import org.apache.spark.sql.functions._
   * merged id in the same pass (x->c2 becomes x->c1), so reads never
   * recurse.
   *
-  * Scale shape per append (the claims ScaleSmoke measures): a CLEAN
+  * Scale shape per append: a CLEAN
   * batch (no index hits) costs the map-only digest gate + per-doc
   * signature appends — corpus-FLAT. A batch WITH cross edges adds
   * one two-column scan of `members` to resolve matched ids to their

@@ -38,8 +38,8 @@ import org.apache.spark.sql.functions._
   * Candidate cost is Σ_g C(cnt_g, 2) over prefix grams, so it scales
   * with how many strings SHARE rare grams. Corpus growth that brings
   * new vocabulary (new entity populations) grows candidates linearly
-  * (ScaleSmoke r12d measures this at 20x with gram-disjoint
-  * replicas); growth that densifies the SAME gram vocabulary (ever
+  * (measured at 20x with gram-disjoint replicas); growth that
+  * densifies the SAME gram vocabulary (ever
   * more lookalikes) grows candidates quadratically at ANY q — and on
   * low-entropy keys (zero-padded ids) longer grams do NOT help:
   * their padding-run grams stay corpus-common at every q (measured:
@@ -146,8 +146,7 @@ object EditSimilarity {
     * "Customer#…") collapse onto few keys and verify quadratically —
     * for those, normalize first (strip the constant prefix) or key on
     * `reverse(s)` (levenshtein is reversal-invariant, so pairs and
-    * distances are unchanged; the ScaleSmoke r14 block measures
-    * exactly this shape). prefixLen <= 0 keeps the whole string (no
+    * distances are unchanged). prefixLen <= 0 keeps the whole string (no
     * pruning — the default).
     */
   def deletionVariants(s: Column, maxDist: Int,
@@ -183,7 +182,7 @@ object EditSimilarity {
     * for ed <= d — [[graft.functions.CharCountSig]]) before the
     * banded Levenshtein. Sound at any setting (the bound only
     * rejects provable non-matches, spec-asserted), but OFF by
-    * default: ScaleSmoke r15 measured the d=2 full-corpus verify
+    * default: a round-15 scale run measured the d=2 full-corpus verify
     * tier at 63 s without vs 106 s with the filter — on match-dense
     * candidate sets (the self-join norm: candidates come from
     * variant-key equality, so most ARE matches) the filter rejects

@@ -79,15 +79,18 @@ object Http {
   /** Retry/pacing policy (polars_requests.py:173-194 defaults). */
   final case class Options(
       logGroup: String = "http",
-      timeoutMs: Int = 10000,
       minTimeMs: Long = 0L,
       okStatuses: Set[Int] = Set(200),
       badStatuses: Set[Int] = Set.empty,
       retryCount: Int = 0,
-      maxBatchSize: Long = 50000L,
-      maxRetrySleepMs: Long = 300000L) {
+      maxBatchSize: Long = 50000L) {
     require(retryCount <= 12, "Too many retries")  // polars_requests.py:78
   }
+
+  // Per-request timeout and backoff cap: the reference's defaults
+  // (polars_requests.py:173-194), which no caller overrides.
+  private val TimeoutMs = 10000
+  private val MaxRetrySleepMs = 300000L
 
   private def headerStruct(name: String, value: Column): Column =
     struct(lit(name).as("name"), value.cast(StringType).as("value"))
@@ -116,8 +119,6 @@ object Http {
   /** response data as UTF-8 text (polars_requests.py:247-248). */
   def responseText(response: Column): Column =
     response.getField("data").cast(StringType).as("response_text")
-
-  def responseStatus(response: Column): Column = response.getField("status")
 
   /** Execute the requests in `requestCol`, appending `responseCol`.
     *
@@ -149,9 +150,9 @@ object Http {
               if (req.isNullAt(1)) Nil
               else req.getSeq[Row](1).map(h => (h.getString(0), h.getString(1)))
             var previousStatus: Option[Int] = None
-            val ex = retrying(math.max(1, o.retryCount), o.maxRetrySleepMs) {
+            val ex = retrying(math.max(1, o.retryCount), MaxRetrySleepMs) {
               val t0 = System.nanoTime()
-              val ex = transport.get(url, headers, o.timeoutMs)
+              val ex = transport.get(url, headers, TimeoutMs)
               previousStatus.filter(p => p != ex.status && !o.badStatuses.contains(p))
                 .foreach(p => Actions.warn(s"Retried $p -> ${ex.status}", Actions.StatusCodeWarning))
               previousStatus = Some(ex.status)

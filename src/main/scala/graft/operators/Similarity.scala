@@ -274,7 +274,7 @@ object Similarity {
   /** IVF sizing law: cells ∝ sqrt(corpus) keeps (members per cell) x
     * (queries probing it) — and so candidate-join volume — linear in
     * corpus size. A fixed cell count makes self-ANN quadratic: 10x
-    * data at 16 cells measured 20x runtime in ScaleSmoke; sqrt-scaled
+    * data at 16 cells measured 20x runtime; sqrt-scaled
     * cells restore ~linear growth.
     */
   def suggestedCentroids(corpusSize: Long): Int =
@@ -318,13 +318,6 @@ object Similarity {
       .withColumn("skew_micro", expr("n * 1000000L div greatest(1L, n_total)"))
       .withColumn("oversized", col("n") > lit(oversizeFactor) * col("expected"))
   }
-
-  /** LSH sizing law: planes ∝ log2(corpus) keeps expected bucket
-    * occupancy — and the per-bucket self-join — constant per row.
-    */
-  def suggestedPlanes(corpusSize: Long, targetPerBucket: Int = 32): Int =
-    math.min(24, math.max(4,
-      math.ceil(math.log(corpusSize.toDouble / targetPerBucket) / math.log(2.0)).toInt))
 
   /** IVF (inverted-file) coarse quantizer: deterministic seeded
     * sample of the corpus as initial centroids, refined with
@@ -784,7 +777,7 @@ object Similarity {
     * replays it bit-for-bit (the same pairing every exact re-rank
     * relies on). Two lessons are baked into the call sites: the dot
     * itself through [[graft.functions.CosineSimilarity]], not a
-    * zip_with/aggregate HOF (~10x slower interpreted, PROFILE.md
+    * zip_with/aggregate HOF (~10x slower interpreted, profiled in
     * round 8), and the int8->float cast hoisted to the per-ROW
     * projections, never per pair (`transform` is an interpreted
     * CodegenFallback — r16).

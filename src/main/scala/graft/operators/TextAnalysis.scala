@@ -44,11 +44,6 @@ object TextAnalysis {
     length(regexp_replace(text, "[^.,;:!?'\"()\\[\\]-]", "")).cast(DoubleType) /
       nullif(length(text), lit(0)).cast(DoubleType)
 
-  /** Ratio of uppercase letters to letters. */
-  def upperRatio(text: Column): Column =
-    length(regexp_replace(text, "[^A-Z]", "")).cast(DoubleType) /
-      nullif(length(regexp_replace(text, "[^A-Za-z]", "")), lit(0)).cast(DoubleType)
-
   val EnglishStopwords: Seq[String] = Seq(
     "the", "a", "an", "of", "to", "and", "in", "is", "it", "for", "on", "with")
 
@@ -442,7 +437,7 @@ object TextAnalysis {
     // run-length-encoded in-row via sort_array + index HOFs (right
     // shape, but an O(L log L) sort + two struct lambdas + a
     // try_element_at per element), round 5 fused it into one native
-    // pass (profiled 2.2x cold: PROFILE.md). The HOF twin below is
+    // pass (profiled 2.2x faster cold). The HOF twin below is
     // kept as the reference semantics, asserted bit-identical in
     // TextAnalysisSpec.
     def cells(df: DataFrame) =
@@ -714,8 +709,7 @@ object TextAnalysis {
         // DECIMAL(38,0) intermediates: n·10^12 and na·nb both exceed
         // int64 once symbol occurrences pass ~9.2e6 / ~3e9, which a
         // real corpus does by sf1. The quotient is ≤ 10^12 (na ≥ n,
-        // nb ≥ n), so the int64 `div` result never overflows — the
-        // ScaleSmoke r14 row trains past the old int64 refusal point.
+        // nb ≥ n), so the int64 `div` result never overflows.
         .withColumn("score_q", expr(
           "cast(n as decimal(25,0)) * 1000000000000 div " +
             "(cast(na as decimal(19,0)) * cast(nb as decimal(19,0)))"))

@@ -646,8 +646,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // and added with a comment.
     val allow: Map[String, Int] = Map(
       // packSequences bucket-totals prefix sum: input is ONE row per
-      // bucket (<= n/bucketSize rows; PLANS.md "sequence packing"),
-      // never the token stream
+      // bucket (<= n/bucketSize rows), never the token stream
       "q_pack_sequences" -> 1,
       // the same packSequences bucket-totals window inside the epoch
       // assembly composition

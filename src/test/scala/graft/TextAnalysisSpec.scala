@@ -1190,24 +1190,26 @@ class TextAnalysisSpec extends AnyFunSuite {
 
   test("termFreqs: one-pass counts == size(filter) per term, null/empty rows match") {
     import graft.functions.NativeFunctions
-    val terms = Seq("the", "und", "zz", "é")
     val rows = Seq(
       (1L, Seq("the", "the", "und", "x")),
       (2L, Seq.empty[String]),
       (3L, Seq("é", "the", null)),
       (4L, null.asInstanceOf[Seq[String]]))
     val df = rows.toDF("id", "ts")
-    val native = df.select(col("id"),
-        NativeFunctions.termFreqs(col("ts"), terms).as("tf"))
-      .orderBy("id").collect()
-      .map(r => (r.getLong(0), if (r.isNullAt(1)) null else r.getSeq[Int](1).toSeq))
-    val hof = df.select(col("id") +: terms.zipWithIndex.map { case (t, i) =>
-        size(filter(col("ts"), x => x === lit(t))).as(s"c_$i") }: _*)
-      .orderBy("id").collect()
-      .map(r => (r.getLong(0),
-        if (r.isNullAt(1)) null
-        else terms.indices.map(i => r.getInt(i + 1)).toSeq))
-    assert(native.toSeq === hof.toSeq)
+    // the second list repeats a term: it counts at both positions
+    Seq(Seq("the", "und", "zz", "é"), Seq("the", "und", "the", "é")).foreach { terms =>
+      val native = df.select(col("id"),
+          NativeFunctions.termFreqs(col("ts"), terms).as("tf"))
+        .orderBy("id").collect()
+        .map(r => (r.getLong(0), if (r.isNullAt(1)) null else r.getSeq[Int](1).toSeq))
+      val hof = df.select(col("id") +: terms.zipWithIndex.map { case (t, i) =>
+          size(filter(col("ts"), x => x === lit(t))).as(s"c_$i") }: _*)
+        .orderBy("id").collect()
+        .map(r => (r.getLong(0),
+          if (r.isNullAt(1)) null
+          else terms.indices.map(i => r.getInt(i + 1)).toSeq))
+      assert(native.toSeq === hof.toSeq, s"terms $terms")
+    }
   }
 
   test("trained lang-ID: empty/gramless text predicts 'und', scoring is deterministic") {
