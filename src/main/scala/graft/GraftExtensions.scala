@@ -47,17 +47,17 @@ object GraftExtensions {
         arity("cosine_similarity", 2, args); CosineSimilarity(args(0), args(1))
       }),
     (FunctionIdentifier("simhash"),
-      info("simhash", "simhash(tokens) - 63-bit SimHash of a string array"),
+      info("simhash", "simhash(tokens) - 63-bit SimHash of a string array " +
+        "(code-point polynomial token hashes; oracle-replayable)"),
       (args: Seq[Expression]) => { arity("simhash", 1, args); SimHash(args.head) }),
     (FunctionIdentifier("minhash_signature"),
       info("minhash_signature",
-        "minhash_signature(hashes, k, seed) - k-wide MinHash signature of a " +
-          "long array; NULL when the array is empty or all-null"),
+        "minhash_signature(hashes, k) - k-wide MinHash signature of a " +
+          "long array (closed-form hash family); NULL when the array is " +
+          "empty or all-null"),
       (args: Seq[Expression]) => {
-        arity("minhash_signature", 3, args)
-        MinHashSignature(args(0),
-          args(1).eval().asInstanceOf[Int],
-          args(2).eval() match { case l: Long => l; case i: Int => i.toLong })
+        arity("minhash_signature", 2, args)
+        MinHashSignature(args(0), args(1).eval().asInstanceOf[Int])
       }),
     (FunctionIdentifier("poly_fingerprint"),
       info("poly_fingerprint",

@@ -173,8 +173,7 @@ object PipelineQueries {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       // (D) one LSH discovery + closure serves dedup AND split
       val pairs = Dedup.minhashNearDupPairs(kept, "doc_id", "text",
-        numHashes = 64, bands = 32, shingleWidth = 3, threshold = 0.5,
-        portable = true)
+        numHashes = 64, bands = 32, shingleWidth = 3, threshold = 0.5)
       val split = Dedup.leakageSafeSplit(kept, "doc_id", pairs,
         Seq("train" -> 0.9, "val" -> 0.1))
       val canon = split.filter(col("doc_id") === col("canonical_id"))
@@ -233,8 +232,7 @@ object PipelineQueries {
     //      row-counted ----
     "dedup_minhash_lsh" -> ((s, d) =>
       Dedup.minhashNearDupPairs(t(s, d, "documents"), "doc_id", "text",
-          numHashes = 64, bands = 16, shingleWidth = 3, threshold = 0.5,
-          portable = true)
+          numHashes = 64, bands = 16, shingleWidth = 3, threshold = 0.5)
         .select(col("id_a"), col("id_b"), col("jaccard"))
         .orderBy(col("id_a"), col("id_b"))),
 
@@ -252,7 +250,7 @@ object PipelineQueries {
           shingleWidth = 3, threshold = 0.5)
         .select(col("id_a"), col("id_b"))
       val cand = Dedup.minhashCandidatePairs(docs, "doc_id", "text",
-        numHashes = 64, bands = 16, shingleWidth = 3, portable = true)
+        numHashes = 64, bands = 16, shingleWidth = 3)
       Dedup.pairEvalReport(truth, cand)
     }),
 
@@ -880,9 +878,9 @@ object PipelineQueries {
       val e = t(s, d, "embeddings")
       val cents = Similarity.trainIvfCentroids(e,
         nCentroids = Similarity.suggestedCentroids(e.count()), dim = 64,
-        iterations = 1, portable = true)
+        iterations = 1)
       val pairs = Similarity.semanticDedupPairs(e, "vec_id", "embedding",
-        cents, threshold = 0.3, portable = true)
+        cents, threshold = 0.3)
       Dedup.dedupByNearDup(e, "vec_id", pairs)
         .select(col("vec_id"), col("label"))
         .orderBy(col("vec_id"))
@@ -909,8 +907,7 @@ object PipelineQueries {
         floor(TextAnalysis.qualityScoreRaw(col("text")) * lit(10000.0) + lit(0.5))
           .cast(LongType))
       val pairs = Dedup.minhashNearDupPairs(docs, "doc_id", "text",
-        numHashes = 64, bands = 32, shingleWidth = 3, threshold = 0.5,
-        portable = true)
+        numHashes = 64, bands = 32, shingleWidth = 3, threshold = 0.5)
       Dedup.dedupByNearDupPreferring(scored, "doc_id", pairs, "quality_q4")
         .select(col("doc_id"), col("quality_q4"))
         .orderBy(col("doc_id"))
@@ -923,8 +920,7 @@ object PipelineQueries {
     //      integer micro-units the oracle replays slot-for-slot ----
     "dedup_bbit_eval" -> ((s, d) =>
       Dedup.bbitMinhashCard(t(s, d, "documents"), "doc_id", "text",
-          numHashes = 64, bands = 16, shingleWidth = 3, portable = true,
-          bits = Seq(4, 1))
+          numHashes = 64, bands = 16, shingleWidth = 3, bits = Seq(4, 1))
         .orderBy(col("id_a"), col("id_b"))),
 
     // ---- cross-corpus near-dup pairs (the daily-ingest shape): the
@@ -935,7 +931,7 @@ object PipelineQueries {
       Dedup.minhashNearDupPairsCross(
           docs.filter(col("doc_id") % 5 === 0), docs.filter(col("doc_id") % 5 =!= 0),
           "doc_id", "text", numHashes = 64, bands = 16, shingleWidth = 3,
-          threshold = 0.5, portable = true)
+          threshold = 0.5)
         .orderBy(col("delta_id"), col("corpus_id"))
     }),
 
@@ -1078,8 +1074,7 @@ object PipelineQueries {
     //      banding keeps the pigeonhole bands wide (15 bits), so
     //      candidate collisions — and the output — stay near-dup-sized ----
     "dedup_simhash" -> ((s, d) =>
-      Dedup.simhashNearDupPairs(t(s, d, "documents"), "doc_id", "text", maxDist = 3,
-          portable = true)
+      Dedup.simhashNearDupPairs(t(s, d, "documents"), "doc_id", "text", maxDist = 3)
         .orderBy(col("id_a"), col("id_b"))),
 
     // ---- brute-force exact ANN: top-1 cosine neighbor for every
@@ -1150,9 +1145,8 @@ object PipelineQueries {
       val e = t(s, d, "embeddings")
       val cents = Similarity.trainIvfCentroids(e,
         nCentroids = Similarity.suggestedCentroids(e.count()), dim = 64,
-        iterations = 1, portable = true)
-      Similarity.hardNegativesIvf(e, "label", k = 2, cents, nProbe = 4,
-          portable = true)
+        iterations = 1)
+      Similarity.hardNegativesIvf(e, "label", k = 2, cents, nProbe = 4)
         .select(col("query_id"), col("rank"), col("id").as("neg_id"))
         .orderBy(col("query_id"), col("rank"))
     }),
@@ -1163,8 +1157,7 @@ object PipelineQueries {
     //      ranking — the ANN pipeline is hash-matched end to end ----
     "sim_topk_lsh" -> ((s, d) => {
       val e = t(s, d, "embeddings")
-      Similarity.lshTopK(e, e, k = 1, dim = 64, numPlanes = 6, tables = 8,
-          portable = true)
+      Similarity.lshTopK(e, e, k = 1, dim = 64, numPlanes = 6, tables = 8)
         .select(col("query_id"), col("rank"), col("id").as("nn_id"))
         .orderBy(col("query_id"), col("rank"))
     }),
@@ -1178,9 +1171,8 @@ object PipelineQueries {
     "sim_topk_ivf" -> ((s, d) => {
       val e = t(s, d, "embeddings")
       val cents = Similarity.trainIvfCentroids(e,
-        nCentroids = Similarity.suggestedCentroids(e.count()), dim = 64, iterations = 1,
-        portable = true)
-      Similarity.ivfTopK(e, e, k = 1, cents, nProbe = 4, portable = true)
+        nCentroids = Similarity.suggestedCentroids(e.count()), dim = 64, iterations = 1)
+      Similarity.ivfTopK(e, e, k = 1, cents, nProbe = 4)
         .select(col("query_id"), col("id").as("nn_id"))
         .orderBy(col("query_id"))
     }),
@@ -1194,9 +1186,9 @@ object PipelineQueries {
       val e = t(s, d, "embeddings")
       val cents = Similarity.trainIvfCentroids(e,
         nCentroids = Similarity.suggestedCentroids(e.count()), dim = 64,
-        iterations = 1, portable = true)
+        iterations = 1)
       Similarity.ivfCellSkew(e, "vec_id", "embedding", cents,
-          oversizeFactor = 2, portable = true)
+          oversizeFactor = 2)
         .select(col("cell").cast(LongType).as("cell"), col("n"),
           col("n_total"), col("expected"), col("skew_micro"), col("oversized"))
         .orderBy(col("cell"))
@@ -1214,9 +1206,9 @@ object PipelineQueries {
       val e = t(s, d, "embeddings")
       val cents = Similarity.trainIvfCentroids(e,
         nCentroids = Similarity.suggestedCentroids(e.count()), dim = 64,
-        iterations = 1, portable = true)
+        iterations = 1)
       Similarity.ivfTopK(e.filter(col("label") < 5), e, k = 1, cents,
-          nProbe = 4, portable = true)
+          nProbe = 4)
         .select(col("query_id"), col("id").as("nn_id"))
         .orderBy(col("query_id"))
     }),
@@ -1232,8 +1224,8 @@ object PipelineQueries {
       val e = t(s, d, "embeddings")
       val cents = IndexStore.ivfCentroidsCached(e,
         nCentroids = Similarity.suggestedCentroids(e.count()), dim = 64,
-        baseDir = artifactDir, iterations = 1, portable = true)
-      Similarity.ivfTopK(e, e, k = 1, cents, nProbe = 4, portable = true)
+        baseDir = artifactDir, iterations = 1)
+      Similarity.ivfTopK(e, e, k = 1, cents, nProbe = 4)
         .select(col("query_id"), col("id").as("nn_id"))
         .orderBy(col("query_id"))
     }),
@@ -1249,11 +1241,9 @@ object PipelineQueries {
       val e = t(s, d, "embeddings")
       val cents = IndexStore.ivfCentroidsCached(e,
         nCentroids = Similarity.suggestedCentroids(e.count()), dim = 64,
-        baseDir = artifactDir, iterations = 1, portable = true)
-      val prefix = IvfIndex.ivfIndexCached(e, "vec_id", "embedding", cents,
-        portable = true)
-      IvfIndex.ivfTopKFromIndex(s, prefix, e, k = 1, cents, nProbe = 4,
-          portable = true)
+        baseDir = artifactDir, iterations = 1)
+      val prefix = IvfIndex.ivfIndexCached(e, "vec_id", "embedding", cents)
+      IvfIndex.ivfTopKFromIndex(s, prefix, e, k = 1, cents, nProbe = 4)
         .select(col("query_id"), col("id").as("nn_id"))
         .orderBy(col("query_id"))
     }),
@@ -1271,11 +1261,10 @@ object PipelineQueries {
       val delta = e.filter(col("vec_id") % 5 === 0)
       val cents = Similarity.trainIvfCentroids(base,
         nCentroids = Similarity.suggestedCentroids(base.count()), dim = 64,
-        iterations = 1, portable = true)
+        iterations = 1)
       val prefix = IvfIndex.ivfAppendCached(base, delta, "vec_id",
-        "embedding", cents, portable = true)
-      IvfIndex.ivfTopKFromIndex(s, prefix, e, k = 1, cents, nProbe = 4,
-          portable = true)
+        "embedding", cents)
+      IvfIndex.ivfTopKFromIndex(s, prefix, e, k = 1, cents, nProbe = 4)
         .select(col("query_id"), col("id").as("nn_id"))
         .orderBy(col("query_id"))
     }),
@@ -1289,8 +1278,8 @@ object PipelineQueries {
       val e = t(s, d, "embeddings")
       val cents = Similarity.trainIvfCentroids(e,
         nCentroids = Similarity.suggestedCentroids(e.count()), dim = 64,
-        iterations = 1, portable = true)
-      Similarity.centroidPrototypicality(e, cents, portable = true)
+        iterations = 1)
+      Similarity.centroidPrototypicality(e, cents)
         .orderBy(col("proto_micro").asc, col("id").asc).limit(20)
         .select(col("id"), col("cell"), col("proto_micro"))
     }),
@@ -1457,9 +1446,8 @@ object PipelineQueries {
         .select(col("query_id"), col("id").as("nn_id"))
       val cents = Similarity.trainIvfCentroids(e,
         nCentroids = Similarity.suggestedCentroids(e.count()), dim = 64,
-        iterations = 1, portable = true)
-      val approx = Similarity.ivfTopK(e, e, k = 1, cents, nProbe = 4,
-          portable = true)
+        iterations = 1)
+      val approx = Similarity.ivfTopK(e, e, k = 1, cents, nProbe = 4)
         .select(col("query_id"), col("id").as("nn_id"))
       Similarity.recallReport(truth, approx)
     }),
@@ -1480,11 +1468,11 @@ object PipelineQueries {
         .select(col("query_id"), col("id").as("nn_id"))
       val cents = Similarity.trainIvfCentroids(base,
         nCentroids = Similarity.suggestedCentroids(base.count()), dim = 64,
-        iterations = 1, portable = true)
+        iterations = 1)
       val prefix = IvfIndex.ivfAppendCached(base, delta, "vec_id",
-        "embedding", cents, portable = true)
+        "embedding", cents)
       val approx = IvfIndex.ivfTopKFromIndex(s, prefix, e, k = 1, cents,
-          nProbe = 4, portable = true)
+          nProbe = 4)
         .select(col("query_id"), col("id").as("nn_id"))
       Similarity.recallReport(truth, approx)
     }),
@@ -1503,14 +1491,12 @@ object PipelineQueries {
       val delta = e.filter(col("vec_id") % 5 === 0)
       val baseCents = Similarity.trainIvfCentroids(base,
         nCentroids = Similarity.suggestedCentroids(base.count()), dim = 64,
-        iterations = 1, portable = true)
+        iterations = 1)
       val drifted = IvfIndex.ivfAppendCached(base, delta, "vec_id",
-        "embedding", baseCents, portable = true)
+        "embedding", baseCents)
       val (rt, cents) = IvfIndex.ivfRetrainCached(s, drifted,
-        nCentroids = Similarity.suggestedCentroids(e.count()),
-        portable = true)
-      IvfIndex.ivfTopKFromIndex(s, rt, e, k = 1, cents, nProbe = 4,
-          portable = true)
+        nCentroids = Similarity.suggestedCentroids(e.count()))
+      IvfIndex.ivfTopKFromIndex(s, rt, e, k = 1, cents, nProbe = 4)
         .select(col("query_id"), col("id").as("nn_id"))
         .orderBy(col("query_id"))
     }),
@@ -1528,14 +1514,13 @@ object PipelineQueries {
         .select(col("query_id"), col("id").as("nn_id"))
       val baseCents = Similarity.trainIvfCentroids(base,
         nCentroids = Similarity.suggestedCentroids(base.count()), dim = 64,
-        iterations = 1, portable = true)
+        iterations = 1)
       val drifted = IvfIndex.ivfAppendCached(base, delta, "vec_id",
-        "embedding", baseCents, portable = true)
+        "embedding", baseCents)
       val (rt, cents) = IvfIndex.ivfRetrainCached(s, drifted,
-        nCentroids = Similarity.suggestedCentroids(e.count()),
-        portable = true)
+        nCentroids = Similarity.suggestedCentroids(e.count()))
       val approx = IvfIndex.ivfTopKFromIndex(s, rt, e, k = 1, cents,
-          nProbe = 4, portable = true)
+          nProbe = 4)
         .select(col("query_id"), col("id").as("nn_id"))
       Similarity.recallReport(truth, approx)
     }),
@@ -1575,7 +1560,7 @@ object PipelineQueries {
           e.repartition(s.sparkContext.defaultParallelism), e, k = 10)
         .select(col("query_id"), col("id").as("nn_id"))
       val approx = Similarity.lshTopK(e, e, k = 10, dim = 64, numPlanes = 6,
-          tables = 8, portable = true)
+          tables = 8)
         .select(col("query_id"), col("id").as("nn_id"))
       Similarity.recallReport(truth, approx)
     }),
@@ -1593,11 +1578,11 @@ object PipelineQueries {
         .select(col("query_id"), col("id").as("nn_id"))
       val coarse = Similarity.trainIvfCentroids(e,
         nCentroids = Similarity.suggestedCentroids(n), dim = 64,
-        iterations = 1, portable = true)
+        iterations = 1)
       val cbs = Similarity.trainPqCodebooks(e, m = 8, ksub = 16, dim = 64,
-        iterations = 1, portable = true)
+        iterations = 1)
       val approx = Similarity.ivfPqTopK(e, e, k = 10, coarse, cbs, nProbe = 4,
-          shortlist = Similarity.suggestedShortlist(n, 10), portable = true)
+          shortlist = Similarity.suggestedShortlist(n, 10))
         .select(col("query_id"), col("id").as("nn_id"))
       Similarity.recallReport(truth, approx)
     }),
@@ -1612,9 +1597,9 @@ object PipelineQueries {
           e.repartition(s.sparkContext.defaultParallelism), e, k = 10)
         .select(col("query_id"), col("id").as("nn_id"))
       val cbs = Similarity.trainPqCodebooks(e, m = 8, ksub = 16, dim = 64,
-        iterations = 1, portable = true)
+        iterations = 1)
       val approx = Similarity.pqTopKReranked(e, e, k = 10, cbs,
-          shortlist = Similarity.suggestedShortlist(e.count(), 10), portable = true)
+          shortlist = Similarity.suggestedShortlist(e.count(), 10))
         .select(col("query_id"), col("id").as("nn_id"))
       Similarity.recallReport(truth, approx)
     }),
@@ -1628,9 +1613,9 @@ object PipelineQueries {
     "sim_topk_pq" -> ((s, d) => {
       val e = t(s, d, "embeddings")
       val cbs = Similarity.trainPqCodebooks(e, m = 8, ksub = 16, dim = 64,
-        iterations = 1, portable = true)
+        iterations = 1)
       Similarity.pqTopKReranked(e, e, k = 1, cbs,
-          shortlist = Similarity.suggestedShortlist(e.count(), 1), portable = true)
+          shortlist = Similarity.suggestedShortlist(e.count(), 1))
         .select(col("query_id"), col("id").as("nn_id"))
         .orderBy(col("query_id"))
     }),
@@ -1642,9 +1627,9 @@ object PipelineQueries {
     "sim_topk_pq_loaded" -> ((s, d) => {
       val e = t(s, d, "embeddings")
       val cbs = IndexStore.pqCodebooksCached(e, m = 8, ksub = 16, dim = 64,
-        baseDir = artifactDir, iterations = 1, portable = true)
+        baseDir = artifactDir, iterations = 1)
       Similarity.pqTopKReranked(e, e, k = 1, cbs,
-          shortlist = Similarity.suggestedShortlist(e.count(), 1), portable = true)
+          shortlist = Similarity.suggestedShortlist(e.count(), 1))
         .select(col("query_id"), col("id").as("nn_id"))
         .orderBy(col("query_id"))
     }),
@@ -1659,11 +1644,11 @@ object PipelineQueries {
       val n = e.count()
       val coarse = IndexStore.ivfCentroidsCached(e,
         nCentroids = Similarity.suggestedCentroids(n), dim = 64,
-        baseDir = artifactDir, iterations = 1, portable = true)
+        baseDir = artifactDir, iterations = 1)
       val cbs = IndexStore.pqCodebooksCached(e, m = 8, ksub = 16, dim = 64,
-        baseDir = artifactDir, iterations = 1, portable = true)
+        baseDir = artifactDir, iterations = 1)
       Similarity.ivfPqTopK(e, e, k = 1, coarse, cbs, nProbe = 4,
-          shortlist = Similarity.suggestedShortlist(n, 1), portable = true)
+          shortlist = Similarity.suggestedShortlist(n, 1))
         .select(col("query_id"), col("id").as("nn_id"))
         .orderBy(col("query_id"))
     }),
@@ -1680,11 +1665,11 @@ object PipelineQueries {
       val n = e.count()
       val coarse = Similarity.trainIvfCentroids(e,
         nCentroids = Similarity.suggestedCentroids(n), dim = 64,
-        iterations = 1, portable = true)
+        iterations = 1)
       val cbs = Similarity.trainPqCodebooks(e, m = 8, ksub = 16, dim = 64,
-        iterations = 1, portable = true)
+        iterations = 1)
       Similarity.ivfPqTopK(e, e, k = 1, coarse, cbs, nProbe = 4,
-          shortlist = Similarity.suggestedShortlist(n, 1), portable = true)
+          shortlist = Similarity.suggestedShortlist(n, 1))
         .select(col("query_id"), col("id").as("nn_id"))
         .orderBy(col("query_id"))
     }),
@@ -1754,9 +1739,9 @@ object PipelineQueries {
       val n = e.count()
       val cents = Similarity.trainIvfCentroids(e,
         nCentroids = Similarity.suggestedCentroids(n), dim = 64,
-        iterations = 1, portable = true)
+        iterations = 1)
       Similarity.ivfSqTopK(e, e, k = 1, cents, nProbe = 4,
-          shortlist = Similarity.suggestedShortlist(n, 1), portable = true)
+          shortlist = Similarity.suggestedShortlist(n, 1))
         .select(col("query_id"), col("id").as("nn_id"))
         .orderBy(col("query_id"))
     }),
@@ -1773,9 +1758,9 @@ object PipelineQueries {
       val n = e.count()
       val cents = IndexStore.ivfCentroidsCached(e,
         nCentroids = Similarity.suggestedCentroids(n), dim = 64,
-        baseDir = artifactDir, iterations = 1, portable = true)
+        baseDir = artifactDir, iterations = 1)
       Similarity.ivfSqTopK(e, e, k = 1, cents, nProbe = 4,
-          shortlist = Similarity.suggestedShortlist(n, 1), portable = true)
+          shortlist = Similarity.suggestedShortlist(n, 1))
         .select(col("query_id"), col("id").as("nn_id"))
         .orderBy(col("query_id"))
     }),
@@ -1791,9 +1776,9 @@ object PipelineQueries {
         .select(col("query_id"), col("id").as("nn_id"))
       val cents = Similarity.trainIvfCentroids(e,
         nCentroids = Similarity.suggestedCentroids(n), dim = 64,
-        iterations = 1, portable = true)
+        iterations = 1)
       val approx = Similarity.ivfSqTopK(e, e, k = 10, cents, nProbe = 4,
-          shortlist = Similarity.suggestedShortlist(n, 10), portable = true)
+          shortlist = Similarity.suggestedShortlist(n, 10))
         .select(col("query_id"), col("id").as("nn_id"))
       Similarity.recallReport(truth, approx)
     }),
@@ -2232,7 +2217,7 @@ object PipelineQueries {
         docs.filter(col("doc_id") % 3 === 0),
         Seq(docs.filter(col("doc_id") % 3 === 1),
           docs.filter(col("doc_id") % 3 === 2)),
-        "doc_id", "text", threshold = 0.5, portable = true)
+        "doc_id", "text", threshold = 0.5)
       graft.operators.ClusterIndex.resolvedMembers(s, prefix)
         .orderBy(col("doc_id"))
     }),
@@ -3342,7 +3327,7 @@ object PipelineQueries {
       val ddPrefix = graft.operators.DedupIndex.dedupIndexCached(
         base, "doc_id", "text")
       val ndPrefix = graft.operators.NearDupIndex.nearDupIndexCached(
-        base, "doc_id", "text", portable = true)
+        base, "doc_id", "text")
       val exact = graft.operators.DedupIndex.gateNewDocs(s, ddPrefix,
           arrivals, "doc_id", "text")
         .select(col("id").as("doc_id"), col("is_dup").as("exact_dup"))
@@ -3391,7 +3376,7 @@ object PipelineQueries {
       val ddPrefix = graft.operators.DedupIndex.dedupIndexCached(
         base, "doc_id", "text")
       val ndPrefix = graft.operators.NearDupIndex.nearDupIndexCached(
-        base, "doc_id", "text", portable = true)
+        base, "doc_id", "text")
       val health = arrivals.select(col("doc_id"),
           TextAnalysis.gopherSignals(col("text")).as("g"))
         .select(col("doc_id"), col("g.pass").as("health_pass"))
@@ -3425,7 +3410,7 @@ object PipelineQueries {
       val docs = t(s, d, "documents")
       val prefix = graft.operators.NearDupIndex.nearDupIndexCached(
         docs.filter(col("doc_id") % 5 =!= 0), "doc_id", "text",
-        numHashes = 64, bands = 16, shingleWidth = 3, portable = true)
+        numHashes = 64, bands = 16, shingleWidth = 3)
       graft.operators.NearDupIndex.gateNearDups(s, prefix,
           docs.filter(col("doc_id") % 5 === 0), "doc_id", "text",
           threshold = 0.5)
@@ -3443,7 +3428,7 @@ object PipelineQueries {
       val c2 = corpus.filter(col("doc_id") % 4 === 1)
       val prefix = graft.operators.NearDupIndex.nearDupAppendCached(
         c1, c2, "doc_id", "text",
-        numHashes = 64, bands = 16, shingleWidth = 3, portable = true)
+        numHashes = 64, bands = 16, shingleWidth = 3)
       graft.operators.NearDupIndex.gateNearDups(s, prefix,
           docs.filter(col("doc_id") % 5 === 0), "doc_id", "text",
           threshold = 0.5)
@@ -4697,7 +4682,7 @@ object PipelineQueries {
     // rows. The DOUBLE[] cast on BOTH sides of the scoring cosine is what
     // bit-matches graft's native CosineSimilarity (proved by the
     // sim_coreset_kcenter oracle); the FLOAT-precision cosine in a2 is
-    // only an ORDER key and matches NearestCells' portable mode.
+    // only an ORDER key and matches NearestCells' scoring.
     "sim_centroid_outliers" ->
       """WITH n AS (SELECT count(*) AS cnt FROM embeddings),
          hx AS (

@@ -107,35 +107,28 @@ object NativeFunctions {
     GraftSqlShims.column(LangIdHeuristic(GraftSqlShims.expression(text), markers))
 
   /** Single-pass 63-bit SimHash over an array<string> token column. */
-  def simhash(tokens: Column, portable: Boolean = false): Column =
-    GraftSqlShims.column(SimHash(GraftSqlShims.expression(tokens), portable))
+  def simhash(tokens: Column): Column =
+    GraftSqlShims.column(SimHash(GraftSqlShims.expression(tokens)))
 
   /** Single-pass MinHash signature over an array<long> hash column. */
-  def minhashSignature(hashes: Column, numHashes: Int, seed: Long = 42L,
-                       portable: Boolean = false): Column =
+  def minhashSignature(hashes: Column, numHashes: Int): Column =
     GraftSqlShims.column(
-      MinHashSignature(GraftSqlShims.expression(hashes), numHashes, seed, portable))
+      MinHashSignature(GraftSqlShims.expression(hashes), numHashes))
 
-  /** Portable (+/-1-plane, integer-exact) LSH buckets — see
+  /** One-pass LSH bucket array (tables longs) for an array<float>:
+    * +/-1 planes, integer-exact — see
     * [[graft.functions.RademacherBuckets]].
     */
   def rademacherBuckets(v: Column, dim: Int, numPlanes: Int, tables: Int): Column =
     GraftSqlShims.column(
       RademacherBuckets(GraftSqlShims.expression(v), dim, numPlanes, tables))
 
-  /** One-pass LSH bucket array (tables longs) for an array<float>. */
-  def hyperplaneBuckets(v: Column, dim: Int, numPlanes: Int, tables: Int,
-                        seed: Long = 42L): Column =
-    GraftSqlShims.column(
-      HyperplaneBuckets(GraftSqlShims.expression(v), dim, numPlanes, tables, seed))
-
   /** The nProbe nearest centroid cells by cosine, best-first —
     * map-only IVF assignment/probing.
     */
-  def nearestCells(v: Column, centroids: Array[Array[Float]], nProbe: Int,
-                   portable: Boolean = false): Column =
+  def nearestCells(v: Column, centroids: Array[Array[Float]], nProbe: Int): Column =
     GraftSqlShims.column(
-      NearestCells(GraftSqlShims.expression(v), centroids, nProbe, portable))
+      NearestCells(GraftSqlShims.expression(v), centroids, nProbe))
 
   /** PQ ADC lookup table for one query: m*ksub exact integer partial
     * dots of the quantized query subvectors with every codeword.

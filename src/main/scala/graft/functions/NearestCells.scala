@@ -18,18 +18,15 @@ import org.apache.spark.sql.types._
   * The centroid matrix rides in the expression (closure-serialized,
   * shipped once per task): nCentroids ~ sqrt(corpus) stays in the
   * low MBs even at large scale.
-  */
-/** When `portable`, each cell is scored with the exact op sequence
-  * of [[CosineSimilarity]] — dot / (sqrt(|v|^2) * sqrt(|c|^2)), all
+  *
+  * Each cell is scored with the exact op sequence of
+  * [[CosineSimilarity]] — dot / (sqrt(|v|^2) * sqrt(|c|^2)), all
   * double accumulation in index order — so an external engine's
   * cosine function (e.g. DuckDB list_cosine_similarity, already
   * bit-matched against CosineSimilarity) reproduces the cell ranking.
-  * The default mode multiplies by a precomputed reciprocal norm
-  * instead (one multiply per cell rather than a divide + sqrt), which
-  * is order-equivalent mathematically but not bit-identical.
   */
 case class NearestCells(child: Expression, centroids: Array[Array[Float]],
-                        nProbe: Int, portable: Boolean = false)
+                        nProbe: Int)
     extends UnaryExpression with SelfComputeCodegen {
 
   require(nProbe >= 1 && nProbe <= centroids.length,
@@ -43,11 +40,6 @@ case class NearestCells(child: Expression, centroids: Array[Array[Float]],
     var s = 0.0; var i = 0
     while (i < c.length) { s += c(i).toDouble * c(i); i += 1 }
     s
-  }
-
-  @transient private lazy val invNorms: Array[Double] = normsSq.map { s =>
-    val n = math.sqrt(s)
-    if (n == 0.0) 0.0 else 1.0 / n
   }
 
   def compute(arr: ArrayData): ArrayData = {
@@ -65,23 +57,16 @@ case class NearestCells(child: Expression, centroids: Array[Array[Float]],
       }
       i += 1
     }
-    // rank by cosine = proj * invNorm(c) (the query's own norm is a
-    // positive constant across cells, so it cannot change the order);
-    // portable mode divides by sqrt(nv)*sqrt(nc) like CosineSimilarity
-    if (portable) {
-      var nv = 0.0
-      var i2 = 0
-      while (i2 < n) { val x = arr.getFloat(i2).toDouble; nv += x * x; i2 += 1 }
-      val sv = math.sqrt(nv)
-      var c = 0
-      while (c < nc) {
-        val denom = sv * math.sqrt(normsSq(c))
-        proj(c) = if (denom == 0.0) 0.0 else proj(c) / denom
-        c += 1
-      }
-    } else {
-      var c = 0
-      while (c < nc) { proj(c) *= invNorms(c); c += 1 }
+    // cosine = dot / (sqrt(nv) * sqrt(nc)), CosineSimilarity's op order
+    var nv = 0.0
+    var i2 = 0
+    while (i2 < n) { val x = arr.getFloat(i2).toDouble; nv += x * x; i2 += 1 }
+    val sv = math.sqrt(nv)
+    var c = 0
+    while (c < nc) {
+      val denom = sv * math.sqrt(normsSq(c))
+      proj(c) = if (denom == 0.0) 0.0 else proj(c) / denom
+      c += 1
     }
     val out = new Array[Int](nProbe)
     val taken = new Array[Boolean](nc)

@@ -17,8 +17,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * signature computation is the dominant map-side cost of
   * dedup, so constant factors here matter.
   *
-  * Hash parity: token hashing uses XxHash64Function with Spark's
-  * default seed 42 — bit-identical to `functions.xxhash64(col)` — so
+  * Hash parity: [[ShingleHashes]] uses XxHash64Function with Spark's
+  * default seed 42 — bit-identical to `functions.xxhash64(col)`; the
+  * SimHash token hash and the MinHash family are integer-exact, so
   * native and HOF formulations produce identical sketches.
   */
 object SketchExpressions {
@@ -27,8 +28,8 @@ object SketchExpressions {
 
   /** THE portable code-point polynomial fold — (acc*mult + cp) mod
     * 1e9+7 over the string's code points. Every oracle-replayable
-    * hash in this file (PolyFingerprint, PolyShingleHashes, portable
-    * SimHash) must route through this one implementation so they can
+    * hash in this file (PolyFingerprint, PolyShingleHashes, SimHash)
+    * must route through this one implementation so they can
     * never drift apart bit-wise.
     */
   def polyFold(s: String, mult: Long): Long = {
@@ -44,7 +45,7 @@ object SketchExpressions {
   }
 
   /** [[polyFold]] maintaining two accumulators in one pass — the
-    * portable SimHash token hash poly1*2^30 + poly2 without walking
+    * SimHash token hash poly1*2^30 + poly2 without walking
     * the string twice.
     */
   def polyFold2(s: String, mult1: Long, mult2: Long): Long = {
@@ -687,17 +688,15 @@ case class PolyWinnowFingerprints(child: Expression, w: Int, window: Int)
 }
 
 /** 63-bit SimHash over an array<string> of tokens (bit 63 clear so
-  * the sum of powers stays in a signed long).
+  * the sum of powers stays in a signed long). Each token hashes to
+  * poly1(t) * 2^30 + poly2(t) (code-point polynomial folds with
+  * multipliers 1000003 / 1000033, both mod 1e9+7) — ~60 populated
+  * bits, every step integer-exact, so an external SQL engine
+  * recomputes the per-bit votes, the signature, and Hamming
+  * distances verbatim.
   */
-/** When `portable`, each token hashes to poly1(t) * 2^30 + poly2(t)
-  * (code-point polynomial folds with multipliers 1000003 / 1000033,
-  * both mod 1e9+7) instead of xxhash64 — ~60 populated bits, every
-  * step integer-exact, so an external SQL engine recomputes the
-  * per-bit votes, the signature, and Hamming distances verbatim.
-  */
-case class SimHash(child: Expression, portable: Boolean = false)
+case class SimHash(child: Expression)
     extends UnaryExpression with SelfComputeCodegen {
-  import SketchExpressions._
 
   override def dataType: DataType = LongType
   override def nullable: Boolean = true
@@ -709,10 +708,7 @@ case class SimHash(child: Expression, portable: Boolean = false)
     var i = 0
     while (i < n) {
       if (!arr.isNullAt(i)) {
-        val h =
-          if (portable)
-            SketchExpressions.polyFold2(arr.getUTF8String(i).toString, 1000003L, 1000033L)
-          else XxHash64Function.hash(arr.getUTF8String(i), StringType, XxSeed)
+        val h = SketchExpressions.polyFold2(arr.getUTF8String(i).toString, 1000003L, 1000033L)
         var b = 0
         while (b < 63) {
           if (((h >>> b) & 1L) == 1L) balance(b) += 1 else balance(b) -= 1
@@ -857,15 +853,18 @@ case class ShingleBucketCounts(child: Expression, w: Int, buckets: Int)
 /** MinHash signature over an array<long> of (64-bit) element hashes:
   * sig_j = min over elements of (a_j * fold31(x) + b_j) mod P31,
   * identical math to the HOF formulation in Dedup.minhashSignatureHof
-  * for any array with at least one non-null element. Documented
-  * divergence on degenerate input (unreachable via shingleHashes but
-  * exposed through the SQL-registered `minhash_signature`): an empty
-  * array or an all-null array yields NULL here, where the HOF twin
-  * yields an array of numHashes nulls (array_min over no values).
-  * NULL is the saner contract for "no signature computable".
+  * for any array with at least one non-null element. The (a_j, b_j)
+  * are closed-form — a_j = ((j+1)*1000003 + 12345) mod P31,
+  * b_j = ((j+1)*999983 + 54321) mod P31 — so any SQL engine
+  * recomputes the family; values stay < P31 and a_j is nonzero.
+  * Documented divergence on degenerate input (unreachable via
+  * shingleHashes but exposed through the SQL-registered
+  * `minhash_signature`): an empty array or an all-null array yields
+  * NULL here, where the HOF twin yields an array of numHashes nulls
+  * (array_min over no values). NULL is the saner contract for "no
+  * signature computable".
   */
-case class MinHashSignature(child: Expression, numHashes: Int, seed: Long,
-                            portable: Boolean = false)
+case class MinHashSignature(child: Expression, numHashes: Int)
     extends UnaryExpression with SelfComputeCodegen {
   import SketchExpressions._
 
@@ -874,20 +873,9 @@ case class MinHashSignature(child: Expression, numHashes: Int, seed: Long,
   override def prettyName: String = "minhash_signature"
 
   @transient private lazy val params: Array[(Long, Long)] =
-    if (portable)
-      // Closed-form (a_j, b_j) any SQL engine can recompute — the
-      // oracle-checkable hash family (seed is ignored; the family is
-      // fixed by construction). Values stay < P31 and a_j is nonzero.
-      Array.tabulate(numHashes)(j =>
-        (((j + 1).toLong * 1000003L + 12345L) % P31,
-          ((j + 1).toLong * 999983L + 54321L) % P31))
-    else paramsSeeded
-
-  @transient private lazy val paramsSeeded: Array[(Long, Long)] = {
-    val rnd = new scala.util.Random(seed)
-    Array.fill(numHashes)((rnd.nextInt(Int.MaxValue - 1).toLong + 1L,
-      rnd.nextInt(Int.MaxValue).toLong))
-  }
+    Array.tabulate(numHashes)(j =>
+      (((j + 1).toLong * 1000003L + 12345L) % P31,
+        ((j + 1).toLong * 999983L + 54321L) % P31))
 
   def compute(arr: ArrayData): ArrayData = {
     val n = arr.numElements()
@@ -923,15 +911,11 @@ case class MinHashSignature(child: Expression, numHashes: Int, seed: Long,
     copy(child = newChild)
 }
 
-/** All LSH table buckets in one pass: for `tables` independent
-  * hyperplane sets of `numPlanes` Gaussian planes each (seeded
-  * exactly like Similarity.hyperplaneBucket: table t uses
-  * seed + t*7919), computes every projection in a single loop over
-  * the vector and packs sign bits into a long per table.
-  * Replaces tables x numPlanes interpreted HOF dot products per row.
-  */
-/** [[HyperplaneBuckets]] with a portable Rademacher (+/-1) plane
-  * family over 2^20-quantized vector entries: plane (t,p) entry i
+/** All LSH table buckets in one pass: for `tables` independent sets
+  * of `numPlanes` planes each, computes every projection in a single
+  * loop over the vector and packs sign bits into a long per table.
+  * The planes are a Rademacher (+/-1) family over 2^20-quantized
+  * vector entries: plane (t,p) entry i
   * derives its sign from a QUADRATIC mix of the flat index
   * idx = (t*numPlanes+p)*dim + i —
   *   h1 = (h0^2 mod P * 1000003 + 54321) mod P,  h0 = (idx+12345) mod P
@@ -943,9 +927,9 @@ case class MinHashSignature(child: Expression, numHashes: Int, seed: Long,
   * corpus). The projection is the exact integer sum of signed
   * floor(x_i * 2^20) values: no floats in the bucket decision, so
   * any SQL engine computes identical buckets — making LSH ANN
-  * candidate generation oracle-checkable. Recall vs the Gaussian
-  * family is equivalent (signed random projections need sign
-  * symmetry, not normality).
+  * candidate generation oracle-checkable. Signed random projections
+  * need sign symmetry, not normality, so +/-1 planes hold the recall
+  * of Gaussian ones.
   */
 case class RademacherBuckets(child: Expression, dim: Int, numPlanes: Int,
                              tables: Int)
@@ -991,65 +975,6 @@ case class RademacherBuckets(child: Expression, dim: Int, numPlanes: Int,
       var p = 0
       while (p < nPlanes) {
         proj(p) += (if (signs(p)(i) > 0) q else -q)
-        p += 1
-      }
-      i += 1
-    }
-    val buckets = new Array[Long](tables)
-    var t = 0
-    while (t < tables) {
-      var b = 0L
-      var p = 0
-      while (p < numPlanes) {
-        if (proj(t * numPlanes + p) >= 0) b |= (1L << p)
-        p += 1
-      }
-      buckets(t) = b
-      t += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(buckets)
-  }
-
-  override def nullSafeEval(v: Any): Any = compute(v.asInstanceOf[ArrayData])
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-case class HyperplaneBuckets(child: Expression, dim: Int, numPlanes: Int,
-                             tables: Int, seed: Long)
-    extends UnaryExpression with SelfComputeCodegen {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "hyperplane_buckets"
-
-  // [tables*numPlanes][dim], plane (t,p) at index t*numPlanes+p
-  @transient private lazy val planes: Array[Array[Double]] = {
-    val out = new Array[Array[Double]](tables * numPlanes)
-    var t = 0
-    while (t < tables) {
-      val rnd = new scala.util.Random(seed + t * 7919)
-      var p = 0
-      while (p < numPlanes) {
-        out(t * numPlanes + p) = Array.fill(dim)(rnd.nextGaussian())
-        p += 1
-      }
-      t += 1
-    }
-    out
-  }
-
-  def compute(arr: ArrayData): ArrayData = {
-    val n = math.min(arr.numElements(), dim)
-    val nPlanes = tables * numPlanes
-    val proj = new Array[Double](nPlanes)
-    var i = 0
-    while (i < n) {
-      val x = arr.getFloat(i).toDouble
-      var p = 0
-      while (p < nPlanes) {
-        proj(p) += x * planes(p)(i)
         p += 1
       }
       i += 1

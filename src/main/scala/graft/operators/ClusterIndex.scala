@@ -100,14 +100,13 @@ object ClusterIndex {
   def buildClusterIndex(corpus: DataFrame, idCol: String, textCol: String,
                         prefix: String, threshold: Double = 0.5,
                         numHashes: Int = 64, bands: Int = 16,
-                        shingleWidth: Int = 3, seed: Long = 42L,
-                        portable: Boolean = false,
+                        shingleWidth: Int = 3,
                         lineage: String = "full"): Unit = {
     val spark = corpus.sparkSession
     NearDupIndex.buildNearDupIndex(corpus, idCol, textCol, s"${prefix}_nd",
-      numHashes, bands, shingleWidth, seed, portable, lineage)
+      numHashes, bands, shingleWidth, lineage)
     val pairs = Dedup.minhashNearDupPairs(corpus, idCol, textCol,
-      numHashes, bands, shingleWidth, threshold, seed, portable)
+      numHashes, bands, shingleWidth, threshold)
     val comp = Dedup.connectedComponents(
       corpus.select(col(idCol).cast("long").as("id")),
       pairs.select(col("id_a").cast("long").as("id_a"),
@@ -160,10 +159,9 @@ object ClusterIndex {
     requireNotTorn(spark, prefix, "appendToClusterIndex")
     val m = readMeta(spark, prefix)
     val nd = spark.table(s"${prefix}_nd_stats").head()
-    val (numHashes, bands, shingleW, seed, portable) =
+    val (numHashes, bands, shingleW) =
       (nd.getAs[Int]("num_hashes"), nd.getAs[Int]("bands"),
-        nd.getAs[Int]("shingle_w"), nd.getAs[Long]("seed"),
-        nd.getAs[Boolean]("portable"))
+        nd.getAs[Int]("shingle_w"))
     val deltaFp = IndexStore.corpusFingerprint(delta, Seq(idCol, textCol))
     val entry = if (lineageTag.nonEmpty) s"$lineageTag:$deltaFp" else deltaFp
 
@@ -180,7 +178,7 @@ object ClusterIndex {
       .select(col("delta_id").cast("long").as("a"),
         col("cluster_id").cast("long").as("b"))
     val inner = Dedup.minhashNearDupPairs(delta, idCol, textCol,
-        numHashes, bands, shingleW, m.threshold, seed, portable)
+        numHashes, bands, shingleW, m.threshold)
       .select(col("id_a").cast("long").as("a"),
         col("id_b").cast("long").as("b"))
     val deltaIds = delta.select(col(idCol).cast("long").as("a")).distinct()
@@ -293,19 +291,18 @@ object ClusterIndex {
                           idCol: String, textCol: String,
                           threshold: Double = 0.5,
                           numHashes: Int = 64, bands: Int = 16,
-                          shingleWidth: Int = 3, seed: Long = 42L,
-                          portable: Boolean = false): String = {
+                          shingleWidth: Int = 3): String = {
     val spark = base.sparkSession
     val fps = (base +: deltas)
       .map(IndexStore.corpusFingerprint(_, Seq(idCol, textCol)))
     val prefix = s"clidx_v1_${fps.mkString("_")}_t${(threshold * 1000).toInt}" +
-      s"h${numHashes}b${bands}w${shingleWidth}s${seed}p$portable"
+      s"h${numHashes}b${bands}w$shingleWidth"
     val have = Seq("members", "remap", "stats", "nd_sets", "nd_buckets",
       "nd_bkdigest", "nd_stats")
       .forall(s => spark.catalog.tableExists(s"${prefix}_$s"))
     if (!have)
       buildClusterIndex(base, idCol, textCol, prefix, threshold,
-        numHashes, bands, shingleWidth, seed, portable, lineage = fps.head)
+        numHashes, bands, shingleWidth, lineage = fps.head)
     deltas.zip(fps.tail).foreach { case (d, fp) =>
       if (!IvfIndex.lineageHasFingerprint(
           readMeta(spark, prefix).lineage, fp))

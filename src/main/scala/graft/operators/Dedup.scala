@@ -24,11 +24,12 @@ object Dedup {
     */
   private val P31 = 2147483647L
 
-  private def hashParams(numHashes: Int, seed: Long): Seq[(Long, Long)] = {
-    val rnd = new scala.util.Random(seed)
-    Seq.fill(numHashes)((rnd.nextInt(Int.MaxValue - 1).toLong + 1L,
-      rnd.nextInt(Int.MaxValue).toLong))
-  }
+  /** The closed-form MinHash family (a_j, b_j), j = 0..numHashes-1 —
+    * fixed by construction, so an external SQL engine recomputes it.
+    */
+  private def hashParams(numHashes: Int): Seq[(Long, Long)] =
+    (1 to numHashes).map(j =>
+      ((j * 1000003L + 12345L) % P31, (j * 999983L + 54321L) % P31))
 
   def tokens(text: Column): Column = split(trim(text), "\\s+")
 
@@ -43,7 +44,7 @@ object Dedup {
   }
 
   /** Distinct 64-bit shingle hashes — the compact set representation
-    * used for signatures and exact-Jaccard verification. Full 64-bit
+    * used for exact n-gram Jaccard ([[ngramJaccardPairs]]). Full 64-bit
     * width so set Jaccard over hashes equals Jaccard over the shingle
     * strings (collision odds ~2^-64 per pair). Native one-pass
     * expression; hash/order parity with [[shingleHashesHof]] is
@@ -65,34 +66,26 @@ object Dedup {
     * ANSI-overflow-safe). No shuffle, no UDF — pure Catalyst
     * higher-order functions.
     */
-  def minhashSignature(shingleHashes: Column, numHashes: Int, seed: Long = 42L): Column =
-    graft.functions.NativeFunctions.minhashSignature(shingleHashes, numHashes, seed)
+  def minhashSignature(shingleHashes: Column, numHashes: Int): Column =
+    graft.functions.NativeFunctions.minhashSignature(shingleHashes, numHashes)
 
   /** HOF reference formulation of the MinHash signature — identical
     * math, one interpreted pass per hash function; the native
     * expression is tested against it.
     */
-  def minhashSignatureHof(shingleHashes: Column, numHashes: Int, seed: Long = 42L): Column = {
-    val params = hashParams(numHashes, seed)
+  def minhashSignatureHof(shingleHashes: Column, numHashes: Int): Column = {
+    val params = hashParams(numHashes)
     array(params.map { case (a, b) =>
       array_min(transform(shingleHashes, x => pmod(pmod(x, lit(P31)) * a + b, lit(P31))))
     }: _*)
   }
 
-  /** LSH band buckets: array of (band, bucketHash) structs; two docs
-    * sharing any band bucket are candidate near-duplicates.
-    */
-  def lshBuckets(sig: Column, bands: Int, rowsPerBand: Int): Column =
-    array((0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        xxhash64(slice(sig, b * rowsPerBand + 1, rowsPerBand)).as("bucket"))
-    }: _*)
-
-  /** [[lshBuckets]] with a portable polynomial fold in place of
-    * xxhash64: bucket_b = fold((acc,x) -> (acc*1000003 + x) mod 1e9+7)
-    * over the band's signature slice. With sig values < 2^31 the
-    * product stays < 2^51 — any SQL engine replays it exactly (use
-    * with the portable minhash family, whose values fit).
+  /** LSH band buckets: array of (band, bucket) structs; two docs
+    * sharing any band bucket are candidate near-duplicates. The bucket
+    * is a polynomial fold, bucket_b = fold((acc,x) -> (acc*1000003 + x)
+    * mod 1e9+7) over the band's signature slice. With sig values
+    * < 2^31 the product stays < 2^51 — any SQL engine replays it
+    * exactly.
     */
   def lshBucketsPoly(sig: Column, bands: Int, rowsPerBand: Int): Column =
     array((0 until bands).map { b =>
@@ -303,7 +296,10 @@ object Dedup {
     * Returns (id_a, id_b, jaccard) with id_a < id_b.
     */
   /** The compact per-doc signature table shared by every MinHash
-    * operator: (id, shingle-hash set, signature, band buckets).
+    * operator: (id, shingle-hash set, signature, band buckets). Every
+    * step is integer-exact — polynomial shingle hashes, the
+    * closed-form MinHash family, the polynomial band fold — so an
+    * external SQL engine replays candidates and verified pairs.
     * PERSISTED deliberately: it is consumed more than once (bucket
     * explode + verification-join sides), and without a
     * materialization barrier Catalyst's InferFiltersFromGenerate
@@ -314,19 +310,14 @@ object Dedup {
     * standard LSH-dedup shape.
     */
   private def lshSignatureBase(df: DataFrame, idCol: String, textCol: String,
-                               numHashes: Int, bands: Int, shingleWidth: Int,
-                               seed: Long, portable: Boolean): DataFrame = {
+                               numHashes: Int, bands: Int,
+                               shingleWidth: Int): DataFrame = {
     require(numHashes % bands == 0, "numHashes must divide into bands")
     val r = numHashes / bands
-    val sh =
-      if (portable)
-        graft.functions.NativeFunctions.polyShingleHashes(tokens(col(textCol)), shingleWidth)
-      else shingleHashes(col(textCol), shingleWidth)
-    df.select(col(idCol).as("id"), sh.as("sh"))
-      .withColumn("sig",
-        graft.functions.NativeFunctions.minhashSignature(col("sh"), numHashes, seed, portable))
-      .withColumn("bk",
-        if (portable) lshBucketsPoly(col("sig"), bands, r) else lshBuckets(col("sig"), bands, r))
+    df.select(col(idCol).as("id"), graft.functions.NativeFunctions.polyShingleHashes(
+        tokens(col(textCol)), shingleWidth).as("sh"))
+      .withColumn("sig", minhashSignature(col("sh"), numHashes))
+      .withColumn("bk", lshBucketsPoly(col("sig"), bands, r))
       .persist(StorageLevel.MEMORY_AND_DISK)
   }
 
@@ -353,10 +344,9 @@ object Dedup {
     */
   def minhashCandidatePairs(df: DataFrame, idCol: String, textCol: String,
                             numHashes: Int = 64, bands: Int = 16,
-                            shingleWidth: Int = 3, seed: Long = 42L,
-                            portable: Boolean = false): DataFrame =
+                            shingleWidth: Int = 3): DataFrame =
     bandCandidates(lshSignatureBase(df, idCol, textCol, numHashes, bands,
-      shingleWidth, seed, portable))
+      shingleWidth))
 
   /** b-bit minwise hashing evaluation card (Li & König, WWW 2010) —
     * the signature-COMPRESSION ladder: keeping only the lowest b bits
@@ -377,13 +367,12 @@ object Dedup {
     */
   def bbitMinhashCard(df: DataFrame, idCol: String, textCol: String,
                       numHashes: Int = 64, bands: Int = 16,
-                      shingleWidth: Int = 3, seed: Long = 42L,
-                      portable: Boolean = false,
+                      shingleWidth: Int = 3,
                       bits: Seq[Int] = Seq(4, 1)): DataFrame = {
     require(bits.nonEmpty && bits.forall(b => b >= 1 && b <= 16),
       s"bits must be in [1,16], got $bits")
     val base = lshSignatureBase(df, idCol, textCol, numHashes, bands,
-      shingleWidth, seed, portable)
+      shingleWidth)
     val cand = bandCandidates(base)
     val withSides = cand
       .join(base.select(col("id").as("id_a"), col("sh").as("sh_a"),
@@ -427,10 +416,9 @@ object Dedup {
     */
   def nearDupIndex(corpus: DataFrame, idCol: String, textCol: String,
                    numHashes: Int = 64, bands: Int = 16,
-                   shingleWidth: Int = 3, seed: Long = 42L,
-                   portable: Boolean = false): (DataFrame, DataFrame) = {
+                   shingleWidth: Int = 3): (DataFrame, DataFrame) = {
     val base = lshSignatureBase(corpus, idCol, textCol, numHashes, bands,
-      shingleWidth, seed, portable)
+      shingleWidth)
     val buckets = base.select(col("id").as("corpus_id"), explode(col("bk")).as("b"))
       .select(col("b.band"), col("b.bucket"), col("corpus_id"))
     val sets = base.select(col("id").as("corpus_id"), col("sh").as("corpus_sh"))
@@ -439,10 +427,10 @@ object Dedup {
 
   def minhashNearDupPairs(df: DataFrame, idCol: String, textCol: String,
                           numHashes: Int = 64, bands: Int = 16,
-                          shingleWidth: Int = 3, threshold: Double = 0.8,
-                          seed: Long = 42L, portable: Boolean = false): DataFrame = {
+                          shingleWidth: Int = 3,
+                          threshold: Double = 0.8): DataFrame = {
     val base = lshSignatureBase(df, idCol, textCol, numHashes, bands,
-      shingleWidth, seed, portable)
+      shingleWidth)
     val cands = bandCandidates(base)
     val sets = base.select(col("id"), col("sh"))
     cands
@@ -469,11 +457,10 @@ object Dedup {
   def minhashNearDupPairsCross(delta: DataFrame, corpus: DataFrame,
                                idCol: String, textCol: String,
                                numHashes: Int = 64, bands: Int = 16,
-                               shingleWidth: Int = 3, threshold: Double = 0.8,
-                               seed: Long = 42L, portable: Boolean = false): DataFrame = {
+                               shingleWidth: Int = 3,
+                               threshold: Double = 0.8): DataFrame = {
     def sigTable(df: DataFrame): DataFrame =
-      lshSignatureBase(df, idCol, textCol, numHashes, bands, shingleWidth,
-        seed, portable)
+      lshSignatureBase(df, idCol, textCol, numHashes, bands, shingleWidth)
     val db = sigTable(delta)
     val cb = sigTable(corpus)
     def buckets(base: DataFrame): DataFrame =
@@ -508,18 +495,18 @@ object Dedup {
   def incrementalDedup(delta: DataFrame, corpus: DataFrame,
                        idCol: String, textCol: String,
                        numHashes: Int = 64, bands: Int = 16,
-                       shingleWidth: Int = 3, threshold: Double = 0.8,
-                       seed: Long = 42L, portable: Boolean = false): DataFrame = {
+                       shingleWidth: Int = 3,
+                       threshold: Double = 0.8): DataFrame = {
     val ch = corpus.select(md5(col(textCol)).as("__h")).distinct()
     val d1 = delta.withColumn("__h", md5(col(textCol)))
       .join(ch, Seq("__h"), "left_anti").drop("__h")
     val d2 = exactDedup(d1, idCol, textCol)
     val nearCorpus = minhashNearDupPairsCross(d2, corpus, idCol, textCol,
-      numHashes, bands, shingleWidth, threshold, seed, portable)
+      numHashes, bands, shingleWidth, threshold)
     val d3 = d2.join(nearCorpus.select(col("delta_id").as(idCol)).distinct(),
       Seq(idCol), "left_anti")
     val selfPairs = minhashNearDupPairs(d3, idCol, textCol,
-      numHashes, bands, shingleWidth, threshold, seed, portable)
+      numHashes, bands, shingleWidth, threshold)
     d3.join(selfPairs.select(col("id_b").as(idCol)).distinct(), Seq(idCol), "left_anti")
   }
 
@@ -551,14 +538,22 @@ object Dedup {
   /** 63-bit SimHash over tokens, computed per-row (bit 63 left clear
     * so the power-of-two sum stays within signed long under ANSI).
     */
-  def simhash(text: Column, portable: Boolean = false): Column =
-    graft.functions.NativeFunctions.simhash(tokens(text), portable)
+  def simhash(text: Column): Column =
+    graft.functions.NativeFunctions.simhash(tokens(text))
 
-  /** HOF reference formulation of SimHash — 63 interpreted aggregate
-    * passes; the native expression is tested against it.
+  /** HOF reference formulation of SimHash — the token hash
+    * poly1(t) * 2^30 + poly2(t) as code-point folds (ascii() of each
+    * one-code-point substring is its code point), then 63
+    * interpreted aggregate passes; the native expression is tested
+    * against it.
     */
   def simhashHof(text: Column): Column = {
-    val hs = transform(tokens(text), t => xxhash64(t))
+    def poly(t: Column, mult: Long): Column =
+      when(length(t) === 0, lit(0L)).otherwise(aggregate(
+        transform(sequence(lit(1), length(t)), i => ascii(t.substr(i, lit(1)))),
+        lit(0L), (acc, cp) => (acc * lit(mult) + cp) % lit(1000000007L)))
+    val hs = transform(tokens(text),
+      t => poly(t, 1000003L) * lit(1073741824L) + poly(t, 1000033L))
     (0 until 63).map { i =>
       val bitBalance = aggregate(hs, lit(0L), (acc, h) =>
         acc + when(shiftright(h, i).bitwiseAND(lit(1L)) === 1L, lit(1L)).otherwise(lit(-1L)))
@@ -572,12 +567,12 @@ object Dedup {
     * band, then verify with bit_count(xor).
     */
   def simhashNearDupPairs(df: DataFrame, idCol: String, textCol: String,
-                          maxDist: Int = 3, portable: Boolean = false): DataFrame = {
+                          maxDist: Int = 3): DataFrame = {
     val nBands = maxDist + 1
     val width = 63 / nBands
     // Persist: consumed by both sides of the band self-join; avoids
     // recomputing the 63-bit aggregation pipeline (see minhash note).
-    val base = df.select(col(idCol).as("id"), simhash(col(textCol), portable).as("sig"))
+    val base = df.select(col(idCol).as("id"), simhash(col(textCol)).as("sig"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val banded = base.select(col("id"), col("sig"),
       explode(array((0 until nBands).map { b =>

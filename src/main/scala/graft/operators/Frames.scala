@@ -863,20 +863,20 @@ object Frames {
   /** RDF statement sink (polars_utils.py:106-123
     * `print_rdf_statements`): assert single-string-column schema,
     * apply the soft cap, print each statement. One Spark action: an
-    * ordered take of `limit + 1` rows (the [[sampleExact]] order, or
-    * the frame's own with `sample = false`) both bounds the collect
-    * and tells whether the frame was over the cap, so every upstream
-    * side effect (the TMDB API calls) runs exactly once.
+    * ordered take of `limit + 1` rows in the seeded [[sampleExact]]
+    * order both bounds the collect and tells whether the frame was
+    * over the cap, so every upstream side effect (the TMDB API calls)
+    * runs exactly once.
     */
-  def printRdfStatements(df: DataFrame, limit: Int = 250, sample: Boolean = true,
+  def printRdfStatements(df: DataFrame, limit: Int = 250,
                          out: java.io.PrintStream = System.out): Unit = {
     require(df.columns.sameElements(Array("rdf_statement")) &&
       df.schema.head.dataType == org.apache.spark.sql.types.StringType,
       s"print_rdf_statements expects schema {rdf_statement: string}, got ${df.schema}")
-    val rows = (if (sample) sampleExact(df, limit + 1, 42L) else df.limit(limit + 1)).collect()
+    val rows = sampleExact(df, limit + 1, 42L).collect()
     if (rows.length > limit)
-      Actions.warn(s"result has more than $limit rows, capping to $limit" +
-        (if (sample) " (sampled)" else ""), Actions.LimitWarning)
+      Actions.warn(s"result has more than $limit rows, capping to $limit (sampled)",
+        Actions.LimitWarning)
     rows.take(limit).foreach(r => out.println(r.getString(0)))
   }
 

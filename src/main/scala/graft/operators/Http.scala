@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -82,15 +83,14 @@ object Http {
       minTimeMs: Long = 0L,
       okStatuses: Set[Int] = Set(200),
       badStatuses: Set[Int] = Set.empty,
-      retryCount: Int = 0,
-      maxBatchSize: Long = 50000L) {
-    require(retryCount <= 12, "Too many retries")  // polars_requests.py:78
-  }
+      maxBatchSize: Long = 50000L)
 
   // Per-request timeout and backoff cap: the reference's defaults
-  // (polars_requests.py:173-194), which no caller overrides.
+  // (polars_requests.py:173-194), which no caller overrides; and the
+  // tries per request, the value every caller passed.
   private val TimeoutMs = 10000
   private val MaxRetrySleepMs = 300000L
+  private val Tries = 3
 
   private def headerStruct(name: String, value: Column): Column =
     struct(lit(name).as("name"), value.cast(StringType).as("value"))
@@ -125,9 +125,11 @@ object Http {
     * Mirrors the reference's batch loop (polars_requests.py:90-170):
     * one transport session, sequential ordered loop, per-request
     * `minTime` floor (sleep the remainder), exponential-backoff retry
-    * on bad/unknown statuses and transport errors, warning when a
-    * retried request's status changes, hard cap on requests per
-    * batch. Null/empty URL → null response, no network call.
+    * (3 tries) on bad/unknown statuses and transport errors, warning
+    * when a retried request's status changes, hard cap on requests
+    * per batch. Null/empty URL → null response, no network call. The
+    * partition's `::group::` is closed by a task-completion listener,
+    * so it is closed on success and on failure alike.
     */
   def request(df: DataFrame, requestCol: String, opts: Options,
               transport: Transport = JdkTransport,
@@ -137,6 +139,7 @@ object Http {
     val o = opts
     df.repartition(1).mapPartitions { rows =>
       log.info(s"::group::${o.logGroup}")
+      TaskContext.get().addTaskCompletionListener[Unit](_ => log.info("::endgroup::"))
       var count = 0L
       rows.map { row =>
         count += 1
@@ -150,7 +153,7 @@ object Http {
               if (req.isNullAt(1)) Nil
               else req.getSeq[Row](1).map(h => (h.getString(0), h.getString(1)))
             var previousStatus: Option[Int] = None
-            val ex = retrying(math.max(1, o.retryCount), MaxRetrySleepMs) {
+            val ex = retrying(Tries, MaxRetrySleepMs) {
               val t0 = System.nanoTime()
               val ex = transport.get(url, headers, TimeoutMs)
               previousStatus.filter(p => p != ex.status && !o.badStatuses.contains(p))

@@ -113,13 +113,13 @@ object IndexStore {
   def ivfCentroidsCached(corpus: DataFrame, nCentroids: Int, dim: Int,
                          baseDir: String, iterations: Int = 1,
                          idCol: String = "vec_id", vecCol: String = "embedding",
-                         seed: Long = 42L, portable: Boolean = false): Array[Array[Float]] = {
+                         seed: Long = 42L): Array[Array[Float]] = {
     val spark = corpus.sparkSession
     val fp = corpusFingerprint(corpus, Seq(idCol, vecCol))
-    val path = s"$baseDir/ivf_${fp}_c${nCentroids}_d${dim}_i${iterations}_s${seed}_p$portable"
+    val path = s"$baseDir/ivf_${fp}_c${nCentroids}_d${dim}_i${iterations}_s$seed"
     if (!exists(path))
       saveIvfCentroids(spark, Similarity.trainIvfCentroids(corpus, nCentroids,
-        dim, iterations, idCol, vecCol, seed, portable), path)
+        dim, iterations, idCol, vecCol, seed), path)
     loadIvfCentroids(spark, path, nCentroids, dim)
   }
 
@@ -511,14 +511,14 @@ object IndexStore {
   def pqCodebooksCached(corpus: DataFrame, m: Int, ksub: Int, dim: Int,
                         baseDir: String, iterations: Int = 1,
                         idCol: String = "vec_id", vecCol: String = "embedding",
-                        seed: Long = 42L, portable: Boolean = false): Array[Array[Array[Float]]] = {
+                        seed: Long = 42L): Array[Array[Array[Float]]] = {
     require(m > 0 && dim % m == 0, s"dim $dim must divide into m $m subspaces")
     val spark = corpus.sparkSession
     val fp = corpusFingerprint(corpus, Seq(idCol, vecCol))
-    val path = s"$baseDir/pq_${fp}_m${m}_k${ksub}_d${dim}_i${iterations}_s${seed}_p$portable"
+    val path = s"$baseDir/pq_${fp}_m${m}_k${ksub}_d${dim}_i${iterations}_s$seed"
     if (!exists(path))
       savePqCodebooks(spark, Similarity.trainPqCodebooks(corpus, m, ksub, dim,
-        iterations, idCol, vecCol, seed, portable), path)
+        iterations, idCol, vecCol, seed), path)
     loadPqCodebooks(spark, path, m, ksub, dim / m)
   }
 }

@@ -94,12 +94,11 @@ object IvfIndex {
 
   def buildIvfIndex(corpus: DataFrame, idCol: String, vecCol: String,
                     centroids: Array[Array[Float]], prefix: String,
-                    portable: Boolean = false,
                     lineage: String = "full",
                     digestK: Int = Retrieval.DefaultDigestK): Unit = {
     require(centroids.nonEmpty, "centroids must be non-empty")
     val spark = corpus.sparkSession
-    val assigned = assign(corpus, idCol, vecCol, centroids, portable)
+    val assigned = assign(corpus, idCol, vecCol, centroids)
     Bucketing.dropTableAndLocation(spark, s"${prefix}_assign")
     assigned.write.mode("overwrite").partitionBy("cell")
       .saveAsTable(s"${prefix}_assign")
@@ -128,11 +127,10 @@ object IvfIndex {
     * with the same centroids would give it.
     */
   private def assign(vecs: DataFrame, idCol: String, vecCol: String,
-                     centroids: Array[Array[Float]],
-                     portable: Boolean): DataFrame =
+                     centroids: Array[Array[Float]]): DataFrame =
     vecs.select(col(idCol).cast(LongType).as("id"), col(vecCol).as("vec"),
-      element_at(NativeFunctions.nearestCells(col(vecCol), centroids, 1,
-        portable), 1).as("cell"))
+      element_at(NativeFunctions.nearestCells(col(vecCol), centroids, 1),
+        1).as("cell"))
 
   /** IVF top-k against the PERSISTED assignments: identical scoring
     * chain to [[Similarity.ivfTopK]] (same native probe ranking, same
@@ -145,8 +143,7 @@ object IvfIndex {
   def ivfTopKFromIndex(spark: SparkSession, prefix: String,
                        queries: DataFrame, k: Int,
                        centroids: Array[Array[Float]], nProbe: Int = 4,
-                       idCol: String = "vec_id", vecCol: String = "embedding",
-                       portable: Boolean = false): DataFrame = {
+                       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     require(k > 0 && nProbe > 0, "k and nProbe must be positive")
     requireNotTorn(spark, prefix, "ivfTopKFromIndex")
     val stats = spark.table(s"${prefix}_stats")
@@ -155,8 +152,8 @@ object IvfIndex {
     requireCentroidsMatch(stats.head(), stats.columns, prefix, centroids)
     val assigned = spark.table(s"${prefix}_assign")
     val qProbes = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-      explode(NativeFunctions.nearestCells(col(vecCol), centroids, nProbe,
-        portable)).as("cell"))
+      explode(NativeFunctions.nearestCells(col(vecCol), centroids, nProbe))
+        .as("cell"))
     val scored = assigned.join(qProbes, Seq("cell"))
       .filter(col("id") =!= col("query_id"))
       .select(col("query_id"), col("id"),
@@ -175,7 +172,6 @@ object IvfIndex {
   def appendToIvfIndex(spark: SparkSession, prefix: String,
                        deltaVecs: DataFrame, idCol: String, vecCol: String,
                        centroids: Array[Array[Float]],
-                       portable: Boolean = false,
                        lineageTag: String = ""): Unit = {
     require(!deltaVecs.isEmpty, "appendToIvfIndex: delta is empty — " +
       "nothing to append (guard upstream, or skip the fold)")
@@ -193,7 +189,7 @@ object IvfIndex {
     // batchId) tag the fold so a RETRY is detectable by ledger lookup
     // alone — the content fingerprint stays recorded beside it
     val entry = if (lineageTag.nonEmpty) s"$lineageTag:$deltaFp" else deltaFp
-    val assigned = assign(deltaVecs, idCol, vecCol, centroids, portable)
+    val assigned = assign(deltaVecs, idCol, vecCol, centroids)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val flagged = Bloom.blockedDigestFlagged(assigned, col("id"),
@@ -266,15 +262,15 @@ object IvfIndex {
     * the stats fingerprint on load.
     *
     * Training reads (id, vec) straight from the assignments table:
-    * init is an order-insensitive seeded hash pick and the portable
-    * mean update is integer-exact, so retrained centroids equal
+    * init is an order-insensitive seeded hash pick and the mean
+    * update is integer-exact, so retrained centroids equal
     * [[Similarity.trainIvfCentroids]] over the same rows however
     * they arrived — append-then-retrain is oracle-replayable as
     * one fresh training over the union corpus.
     */
   def retrainIvfIndex(spark: SparkSession, prefix: String, newPrefix: String,
                       nCentroids: Int, iterations: Int = 1,
-                      seed: Long = 42L, portable: Boolean = false,
+                      seed: Long = 42L,
                       digestK: Int = Retrieval.DefaultDigestK): Array[Array[Float]] = {
     require(newPrefix != prefix,
       "retrain must write a NEW index prefix — the live index serves " +
@@ -287,9 +283,8 @@ object IvfIndex {
       .select(col("id"), col("vec"))
     val dim = vecs.select(size(col("vec"))).head().getInt(0)
     val cents = Similarity.trainIvfCentroids(vecs, nCentroids, dim,
-      iterations, idCol = "id", vecCol = "vec", seed = seed,
-      portable = portable)
-    buildIvfIndex(vecs, "id", "vec", cents, newPrefix, portable,
+      iterations, idCol = "id", vecCol = "vec", seed = seed)
+    buildIvfIndex(vecs, "id", "vec", cents, newPrefix,
       lineage = s"${old.getAs[String]("lineage")}" +
         s">retrain(c$nCentroids,i$iterations,s$seed)",
       digestK = digestK)
@@ -330,7 +325,6 @@ object IvfIndex {
                           newPrefix: String,
                           centroids: Array[Array[Float]],
                           oversizeFactor: Int = 2, seed: Long = 42L,
-                          portable: Boolean = false,
                           digestK: Int = Retrieval.DefaultDigestK): Array[Array[Float]] = {
     require(newPrefix != prefix,
       "splitOversizedCells must write a NEW index prefix (the retrain " +
@@ -375,9 +369,7 @@ object IvfIndex {
           // exact rows per-cell trainIvfCentroids' orderBy+limit(2)
           // picks. Oversized implies n >= 2, so both ranks exist.
           val hashCol =
-            if (portable)
-              Frames.portableHash(col("id"), lit(seed) + col("cell").cast("long"))
-            else xxhash64(lit(seed) + col("cell").cast("long"), col("id"))
+            Frames.portableHash(col("id"), lit(seed) + col("cell").cast("long"))
           val byHash = org.apache.spark.sql.expressions.Window
             .partitionBy(col("cell")).orderBy(hashCol, col("id"))
           val inits: Map[Int, Array[Array[Float]]] = ovVecs
@@ -394,40 +386,27 @@ object IvfIndex {
           // aggregation job for every cell's means together
           val childCol = ovCells.tail.foldLeft(
             when(col("cell") === ovCells.head,
-              element_at(nearestCells(col("vec"), inits(ovCells.head), 1,
-                portable), 1))) { (acc, c) =>
+              element_at(nearestCells(col("vec"), inits(ovCells.head), 1),
+                1))) { (acc, c) =>
             acc.when(col("cell") === c,
-              element_at(nearestCells(col("vec"), inits(c), 1, portable), 1))
+              element_at(nearestCells(col("vec"), inits(c), 1), 1))
           }
           val assigned = ovVecs.select(col("cell"), col("vec"),
             childCol.as("child"))
-          val means: Map[(Int, Int), Array[Float]] =
-            (if (portable)
-              assigned
-                .select(col("cell"), col("child"),
-                  posexplode(transform(col("vec"),
-                    x => floor(x.cast("double") * lit(1048576.0))
-                      .cast("long"))).as(Seq("pos", "qx")))
-                .groupBy(col("cell"), col("child"), col("pos"))
-                .agg(floor(sum(col("qx")).cast("double") / count(lit(1)))
-                  .cast("long").as("mq"))
-                .groupBy(col("cell"), col("child"))
-                .agg(sort_array(collect_list(struct(col("pos"), col("mq"))))
-                  .as("ps"))
-                .select(col("cell"), col("child"), transform(col("ps"),
-                  p => (p.getField("mq").cast("double") / lit(1048576.0))
-                    .cast("float")).as("cv"))
-            else
-              assigned
-                .select(col("cell"), col("child"),
-                  posexplode(col("vec")).as(Seq("pos", "x")))
-                .groupBy(col("cell"), col("child"), col("pos"))
-                .agg(avg(col("x")).as("mx"))
-                .groupBy(col("cell"), col("child"))
-                .agg(sort_array(collect_list(struct(col("pos"), col("mx"))))
-                  .as("ps"))
-                .select(col("cell"), col("child"), transform(col("ps"),
-                  p => p.getField("mx").cast("float")).as("cv")))
+          val means: Map[(Int, Int), Array[Float]] = assigned
+            .select(col("cell"), col("child"),
+              posexplode(transform(col("vec"),
+                x => floor(x.cast("double") * lit(1048576.0))
+                  .cast("long"))).as(Seq("pos", "qx")))
+            .groupBy(col("cell"), col("child"), col("pos"))
+            .agg(floor(sum(col("qx")).cast("double") / count(lit(1)))
+              .cast("long").as("mq"))
+            .groupBy(col("cell"), col("child"))
+            .agg(sort_array(collect_list(struct(col("pos"), col("mq"))))
+              .as("ps"))
+            .select(col("cell"), col("child"), transform(col("ps"),
+              p => (p.getField("mq").cast("double") / lit(1048576.0))
+                .cast("float")).as("cv"))
             .collect()
             .map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Float](2).toArray)
             .toMap
@@ -440,7 +419,7 @@ object IvfIndex {
       }
     val expanded = kept ++ children
     buildIvfIndex(vecs.select(col("id"), col("vec")), "id", "vec", expanded,
-      newPrefix, portable,
+      newPrefix,
       lineage = s"${old.getAs[String]("lineage")}" +
         s">split(f$oversizeFactor,s$seed,${oversized.size}cells)",
       digestK = digestK)
@@ -479,15 +458,14 @@ object IvfIndex {
     * again. Returns (newPrefix, centroids).
     */
   def ivfRetrainCached(spark: SparkSession, prefix: String, nCentroids: Int,
-                       iterations: Int = 1, seed: Long = 42L,
-                       portable: Boolean = false): (String, Array[Array[Float]]) = {
+                       iterations: Int = 1, seed: Long = 42L): (String, Array[Array[Float]]) = {
     val newPrefix = s"${prefix}_rtc${nCentroids}i${iterations}s$seed"
     val have = Seq("assign", "ids", "iddigest", "stats", "centroids")
       .forall(s => spark.catalog.tableExists(s"${newPrefix}_$s"))
     val cents =
       if (have) loadIndexCentroids(spark, newPrefix)
       else retrainIvfIndex(spark, prefix, newPrefix, nCentroids, iterations,
-        seed, portable)
+        seed)
     (newPrefix, cents)
   }
 
@@ -517,7 +495,6 @@ object IvfIndex {
     */
   def ivfIndexCached(corpus: DataFrame, idCol: String, vecCol: String,
                      centroids: Array[Array[Float]],
-                     portable: Boolean = false,
                      namespace: String = "ivfidx_v2"): String = {
     val spark = corpus.sparkSession
     val fp = IndexStore.corpusFingerprint(corpus, Seq(idCol, vecCol))
@@ -525,7 +502,7 @@ object IvfIndex {
     val have = Seq("assign", "ids", "iddigest", "stats")
       .forall(s => spark.catalog.tableExists(s"${prefix}_$s"))
     if (!have) buildIvfIndex(corpus, idCol, vecCol, centroids, prefix,
-      portable, lineage = fp)
+      lineage = fp)
     prefix
   }
 
@@ -538,8 +515,7 @@ object IvfIndex {
     */
   def ivfAppendCached(baseVecs: DataFrame, deltaVecs: DataFrame,
                       idCol: String, vecCol: String,
-                      centroids: Array[Array[Float]],
-                      portable: Boolean = false): String = {
+                      centroids: Array[Array[Float]]): String = {
     val spark = baseVecs.sparkSession
     val baseFp = IndexStore.corpusFingerprint(baseVecs, Seq(idCol, vecCol))
     val deltaFp = IndexStore.corpusFingerprint(deltaVecs, Seq(idCol, vecCol))
@@ -548,11 +524,10 @@ object IvfIndex {
       .forall(s => spark.catalog.tableExists(s"${prefix}_$s"))
     if (!have)
       buildIvfIndex(baseVecs, idCol, vecCol, centroids, prefix,
-        portable, lineage = baseFp)
+        lineage = baseFp)
     val lineage = spark.table(s"${prefix}_stats").head().getAs[String]("lineage")
     if (!lineageHasFingerprint(lineage, deltaFp))
-      appendToIvfIndex(spark, prefix, deltaVecs, idCol, vecCol, centroids,
-        portable)
+      appendToIvfIndex(spark, prefix, deltaVecs, idCol, vecCol, centroids)
     prefix
   }
 }

@@ -23,7 +23,7 @@ import org.apache.spark.sql.types.LongType
   *     keys: the map-only prefilter that lets an all-new batch (no
   *     bucket collisions) skip the index entirely;
   *   - `{prefix}_stats` — n_docs, lineage ledger, the SIGNATURE
-  *     PARAMS (numHashes/bands/shingleWidth/seed/portable) — gates
+  *     PARAMS (numHashes/bands/shingleWidth) — gates
   *     read them from here, so a probe can never silently use
   *     different hashing than the index was built with;
   *   - `{prefix}_intent` — torn-append marker (shared discipline).
@@ -39,24 +39,21 @@ object NearDupIndex {
 
   /** Mixed LONG key for the (band, bucket) Bloom — collisions only
     * add digest false positives, which the candidate join absorbs.
-    * xxhash64, not an arithmetic fold: buckets span the full 64-bit
-    * range in the default (non-portable) hashing and ANSI mode makes
-    * a wrapping multiply an error, not a mix.
+    * xxhash64, not an arithmetic fold: ANSI mode makes a wrapping
+    * multiply an error, not a mix.
     */
   private def bucketKey(band: Column, bucket: Column): Column =
     xxhash64(band, bucket)
 
   private case class Meta(nDocs: Long, lineage: String, mBits: Int, k: Int,
-                          numHashes: Int, bands: Int, shingleWidth: Int,
-                          seed: Long, portable: Boolean)
+                          numHashes: Int, bands: Int, shingleWidth: Int)
 
   private def readMeta(spark: SparkSession, prefix: String): Meta = {
     val r = spark.table(s"${prefix}_stats").head()
     Meta(r.getAs[Long]("n_docs"), r.getAs[String]("lineage"),
       r.getAs[Int]("digest_mbits"), r.getAs[Int]("digest_k"),
       r.getAs[Int]("num_hashes"), r.getAs[Int]("bands"),
-      r.getAs[Int]("shingle_w"), r.getAs[Long]("seed"),
-      r.getAs[Boolean]("portable"))
+      r.getAs[Int]("shingle_w"))
   }
 
   private def writeDigest(spark: SparkSession, prefix: String,
@@ -78,12 +75,11 @@ object NearDupIndex {
 
   def buildNearDupIndex(corpus: DataFrame, idCol: String, textCol: String,
                         prefix: String, numHashes: Int = 64, bands: Int = 16,
-                        shingleWidth: Int = 3, seed: Long = 42L,
-                        portable: Boolean = false, lineage: String = "full",
+                        shingleWidth: Int = 3, lineage: String = "full",
                         digestK: Int = 4): Unit = {
     val spark = corpus.sparkSession
     val (buckets, sets) = Dedup.nearDupIndex(corpus, idCol, textCol,
-      numHashes, bands, shingleWidth, seed, portable)
+      numHashes, bands, shingleWidth)
     Bucketing.dropTableAndLocation(spark, s"${prefix}_buckets")
     buckets.write.mode("overwrite").saveAsTable(s"${prefix}_buckets")
     Bucketing.dropTableAndLocation(spark, s"${prefix}_sets")
@@ -99,8 +95,7 @@ object NearDupIndex {
         lit(nDocs).as("n_docs"), lit(lineage).as("lineage"),
         lit(mBits).as("digest_mbits"), lit(digestK).as("digest_k"),
         lit(numHashes).as("num_hashes"), lit(bands).as("bands"),
-        lit(shingleWidth).as("shingle_w"), lit(seed).as("seed"),
-        lit(portable).as("portable"))
+        lit(shingleWidth).as("shingle_w"))
       .write.mode("overwrite").saveAsTable(s"${prefix}_stats")
     Bucketing.dropTableAndLocation(spark, s"${prefix}_intent")
   }
@@ -123,7 +118,7 @@ object NearDupIndex {
     requireNotTorn(spark, prefix, "gateNearDups")
     val m = readMeta(spark, prefix)
     val (db, dsets) = Dedup.nearDupIndex(delta, idCol, textCol,
-      m.numHashes, m.bands, m.shingleWidth, m.seed, m.portable)
+      m.numHashes, m.bands, m.shingleWidth)
     val deltaBuckets = db.select(col("corpus_id").as("delta_id"),
       col("band"), col("bucket"))
     val flagged = Bloom.blockedDigestFlagged(deltaBuckets,
@@ -172,7 +167,7 @@ object NearDupIndex {
     val deltaFp = IndexStore.corpusFingerprint(newDocs, Seq(idCol, textCol))
     val entry = if (lineageTag.nonEmpty) s"$lineageTag:$deltaFp" else deltaFp
     val (buckets, sets) = Dedup.nearDupIndex(newDocs, idCol, textCol,
-      m.numHashes, m.bands, m.shingleWidth, m.seed, m.portable)
+      m.numHashes, m.bands, m.shingleWidth)
     val clash = spark.table(s"${prefix}_sets")
       .join(sets.select(col("corpus_id")), Seq("corpus_id"), "left_semi")
       .select(col("corpus_id")).limit(1).collect()
@@ -212,8 +207,7 @@ object NearDupIndex {
         lit(s"${m.lineage}+$entry").as("lineage"),
         lit(mBits).as("digest_mbits"), lit(m.k).as("digest_k"),
         lit(m.numHashes).as("num_hashes"), lit(m.bands).as("bands"),
-        lit(m.shingleWidth).as("shingle_w"), lit(m.seed).as("seed"),
-        lit(m.portable).as("portable"))
+        lit(m.shingleWidth).as("shingle_w"))
       .write.mode("overwrite").saveAsTable(s"${prefix}_stats")
     Bucketing.dropTableAndLocation(spark, s"${prefix}_intent") // commit
   }
@@ -221,17 +215,15 @@ object NearDupIndex {
   /** Build-once gate keyed by corpus fingerprint + signature params. */
   def nearDupIndexCached(corpus: DataFrame, idCol: String, textCol: String,
                          numHashes: Int = 64, bands: Int = 16,
-                         shingleWidth: Int = 3, seed: Long = 42L,
-                         portable: Boolean = false,
+                         shingleWidth: Int = 3,
                          namespace: String = "ndidx_v1"): String = {
     val spark = corpus.sparkSession
     val fp = IndexStore.corpusFingerprint(corpus, Seq(idCol, textCol))
-    val prefix = s"${namespace}_${fp}_h${numHashes}b${bands}w${shingleWidth}" +
-      s"s${seed}p$portable"
+    val prefix = s"${namespace}_${fp}_h${numHashes}b${bands}w${shingleWidth}"
     val have = Seq("buckets", "sets", "bkdigest", "stats")
       .forall(s => spark.catalog.tableExists(s"${prefix}_$s"))
     if (!have) buildNearDupIndex(corpus, idCol, textCol, prefix, numHashes,
-      bands, shingleWidth, seed, portable, lineage = fp)
+      bands, shingleWidth, lineage = fp)
     prefix
   }
 
@@ -241,21 +233,20 @@ object NearDupIndex {
   def nearDupAppendCached(base: DataFrame, delta: DataFrame,
                           idCol: String, textCol: String,
                           numHashes: Int = 64, bands: Int = 16,
-                          shingleWidth: Int = 3, seed: Long = 42L,
-                          portable: Boolean = false): String = {
+                          shingleWidth: Int = 3): String = {
     val spark = base.sparkSession
     val baseFp = IndexStore.corpusFingerprint(base, Seq(idCol, textCol))
     val deltaFp = IndexStore.corpusFingerprint(delta, Seq(idCol, textCol))
     // every signature param is part of the key — same corpora under
-    // different (shingleWidth, seed, portable) must NOT resolve to the
-    // same cached index, or the second caller would silently probe
+    // different (numHashes, bands, shingleWidth) must NOT resolve to
+    // the same cached index, or the second caller would silently probe
     // with the first caller's hashing
     val prefix = s"ndidx_v1_${baseFp}_plus_${deltaFp}_h${numHashes}b$bands" +
-      s"w${shingleWidth}s${seed}p$portable"
+      s"w$shingleWidth"
     val have = Seq("buckets", "sets", "bkdigest", "stats")
       .forall(s => spark.catalog.tableExists(s"${prefix}_$s"))
     if (!have) buildNearDupIndex(base, idCol, textCol, prefix, numHashes,
-      bands, shingleWidth, seed, portable, lineage = baseFp)
+      bands, shingleWidth, lineage = baseFp)
     val lineage = spark.table(s"${prefix}_stats").head().getAs[String]("lineage")
     if (!IvfIndex.lineageHasFingerprint(lineage, deltaFp))
       appendToNearDupIndex(spark, prefix, delta, idCol, textCol)

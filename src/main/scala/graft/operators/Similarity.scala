@@ -97,16 +97,15 @@ object Similarity {
     */
   def hardNegativesIvf(df: DataFrame, labelCol: String, k: Int,
                        centroids: Array[Array[Float]], nProbe: Int,
-                       idCol: String = "vec_id", vecCol: String = "embedding",
-                       portable: Boolean = false): DataFrame = {
+                       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val assigned = df.select(col(idCol).as("id"), col(vecCol).as("cv"),
       col(labelCol).as("clab"),
       element_at(graft.functions.NativeFunctions.nearestCells(
-        col(vecCol), centroids, 1, portable), 1).as("cell"))
+        col(vecCol), centroids, 1), 1).as("cell"))
     val probes = df.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
       col(labelCol).as("qlab"),
       explode(graft.functions.NativeFunctions.nearestCells(
-        col(vecCol), centroids, nProbe, portable)).as("cell"))
+        col(vecCol), centroids, nProbe)).as("cell"))
     val scored = probes.join(assigned, Seq("cell"))
       .filter(col("id") =!= col("query_id") && col("clab") =!= col("qlab"))
       .select(col("query_id"), col("id"), cosine(col("qv"), col("cv")).as("cos"))
@@ -163,7 +162,7 @@ object Similarity {
   }
 
   /** Multi-table LSH ANN (OR-amplification): `tables` independent
-    * hyperplane signatures of `numPlanes` bits each; a corpus row is
+    * random-plane signatures of `numPlanes` bits each; a corpus row is
     * a candidate if it shares ANY table's bucket with the query.
     * Optional multi-probe additionally flips each signature bit once
     * (numPlanes extra probes per table).
@@ -173,28 +172,20 @@ object Similarity {
     * Candidates are deduped BEFORE cosine scoring so each pair is
     * scored once. Recall < 1 by construction; exactness is
     * bruteForceTopK's job (recall asserted in ScalaTest).
-    */
-  /** `portable = true` swaps the Gaussian planes for the Rademacher
-    * (+/-1) family over 2^20-quantized entries: the bucket decision is
-    * exact integer arithmetic, so an external SQL oracle reproduces
-    * the candidate sets bit-for-bit (recall equivalence asserted in
-    * SimilaritySpec; signed random projections need symmetry, not
-    * normality).
+    *
+    * The planes are the Rademacher (+/-1) family over 2^20-quantized
+    * entries ([[graft.functions.RademacherBuckets]]): the bucket
+    * decision is exact integer arithmetic, so an external SQL oracle
+    * reproduces the candidate sets bit-for-bit.
     */
   def lshTopK(corpus: DataFrame, queries: DataFrame, k: Int, dim: Int,
               numPlanes: Int = 6, tables: Int = 8, multiProbe: Boolean = false,
-              idCol: String = "vec_id", vecCol: String = "embedding",
-              seed: Long = 42L, portable: Boolean = false): DataFrame = {
-    // native one-pass bucket computation; bit-parity with
-    // hyperplaneBucket(seed + t*7919) asserted in SimilaritySpec
-    def buckets(v: Column): Column = {
-      val bs =
-        if (portable)
-          graft.functions.NativeFunctions.rademacherBuckets(v, dim, numPlanes, tables)
-        else graft.functions.NativeFunctions.hyperplaneBuckets(
-          v, dim, numPlanes, tables, seed)
-      transform(bs, (b, t) => struct(t.cast(IntegerType).as("t"), b.as("b")))
-    }
+              idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+    // native one-pass bucket computation over all tables
+    def buckets(v: Column): Column =
+      transform(
+        graft.functions.NativeFunctions.rademacherBuckets(v, dim, numPlanes, tables),
+        (b, t) => struct(t.cast(IntegerType).as("t"), b.as("b")))
     // persist both bucket tables: InferFiltersFromGenerate otherwise
     // clones the (tables x planes) projection pipeline into scan-level
     // filters and re-runs it per row interpreted (same pathology as
@@ -252,17 +243,16 @@ object Similarity {
     * fewer cells, or use [[cosineNearDupPairs]]'s hyperplane buckets
     * for an orthogonal candidate generator.
     *
-    * With `portable = true` centroids from [[trainIvfCentroids]]
-    * (portable mode) make the whole pipeline — training, assignment,
-    * within-cell pairs — replayable by an external engine; the
+    * Centroids from [[trainIvfCentroids]] make the whole pipeline —
+    * training, assignment, within-cell pairs — replayable by an
+    * external engine; the
     * declared `dedup_semantic` query is hash-checked end to end.
     */
   def semanticDedupPairs(df: DataFrame, idCol: String, vecCol: String,
-                         centroids: Array[Array[Float]], threshold: Double,
-                         portable: Boolean = false): DataFrame = {
+                         centroids: Array[Array[Float]], threshold: Double): DataFrame = {
     val assigned = df.select(col(idCol).as("id"), col(vecCol).as("v"),
       element_at(graft.functions.NativeFunctions.nearestCells(
-        col(vecCol), centroids, 1, portable), 1).as("cell"))
+        col(vecCol), centroids, 1), 1).as("cell"))
     assigned.as("x").join(assigned.as("y"),
         col("x.cell") === col("y.cell") && col("x.id") < col("y.id"))
       .select(col("x.id").as("id_a"), col("y.id").as("id_b"),
@@ -296,13 +286,12 @@ object Similarity {
     * [[IvfIndex.splitOversizedCells]] work-list.
     */
   def ivfCellSkew(corpus: DataFrame, idCol: String, vecCol: String,
-                  centroids: Array[Array[Float]], oversizeFactor: Int = 2,
-                  portable: Boolean = false): DataFrame = {
+                  centroids: Array[Array[Float]], oversizeFactor: Int = 2): DataFrame = {
     require(oversizeFactor >= 1, "oversizeFactor must be >= 1")
     import graft.functions.NativeFunctions.nearestCells
     val spark = corpus.sparkSession
     val counts = corpus.select(
-        element_at(nearestCells(col(vecCol), centroids, 1, portable), 1)
+        element_at(nearestCells(col(vecCol), centroids, 1), 1)
           .as("cell"))
       .groupBy(col("cell")).agg(count(lit(1)).as("n"))
     val allCells = spark.range(centroids.length.toLong)
@@ -326,10 +315,10 @@ object Similarity {
     * (cell, position) aggregation — shuffles n x dim scalars, never
     * gathers vectors to one node). Centroids (small: nCentroids x
     * dim) are collected to the driver for broadcasting into search.
-    */
-  /** `portable = true` makes training oracle-reproducible: init picks
-    * rows by the portable id hash (not xxhash64), and the mean update
-    * runs in the exact integer domain — entries quantize to
+    *
+    * Training is oracle-reproducible: init picks rows by the seeded
+    * [[Frames.portableHash]] of the id, and the mean update runs in
+    * the exact integer domain — entries quantize to
     * floor(x * 2^20) longs, per-(cell,pos) means are
     * floor(sum / count), and the centroid entry is mean / 2^20 cast
     * to float (a dyadic rational well inside float precision, so both
@@ -339,15 +328,13 @@ object Similarity {
     */
   def trainIvfCentroids(corpus: DataFrame, nCentroids: Int, dim: Int,
                         iterations: Int = 1, idCol: String = "vec_id",
-                        vecCol: String = "embedding", seed: Long = 42L,
-                        portable: Boolean = false): Array[Array[Float]] = {
+                        vecCol: String = "embedding",
+                        seed: Long = 42L): Array[Array[Float]] = {
     val spark = corpus.sparkSession
     import spark.implicits._
     var centroids: Array[Array[Float]] = corpus
       .select(col(idCol).as("id"), col(vecCol).as("v"))
-      .orderBy(
-        (if (portable) Frames.portableHash(col("id"), seed) else xxhash64(lit(seed), col("id"))),
-        col("id"))
+      .orderBy(Frames.portableHash(col("id"), seed), col("id"))
       .limit(nCentroids)
       .collect().map(_.getSeq[Float](1).toArray)
     var it = 0
@@ -357,26 +344,16 @@ object Similarity {
       // vector-keyed aggregation)
       val assigned = corpus.select(col(vecCol).as("v"),
         element_at(graft.functions.NativeFunctions.nearestCells(
-          col(vecCol), centroids, 1, portable), 1).as("cell"))
-      val means =
-        (if (portable)
-          assigned
-            .select(col("cell"), posexplode(transform(col("v"),
-              x => floor(x.cast("double") * lit(1048576.0)).cast("long"))).as(Seq("pos", "qx")))
-            .groupBy(col("cell"), col("pos"))
-            .agg(floor(sum(col("qx")).cast("double") / count(lit(1))).cast("long").as("mq"))
-            .groupBy(col("cell"))
-            .agg(sort_array(collect_list(struct(col("pos"), col("mq")))).as("ps"))
-            .select(col("cell"), transform(col("ps"),
-              p => (p.getField("mq").cast("double") / lit(1048576.0)).cast("float")).as("cv"))
-        else
-          assigned
-            .select(col("cell"), posexplode(col("v")).as(Seq("pos", "x")))
-            .groupBy(col("cell"), col("pos"))
-            .agg(avg(col("x")).as("mx"))
-            .groupBy(col("cell"))
-            .agg(sort_array(collect_list(struct(col("pos"), col("mx")))).as("ps"))
-            .select(col("cell"), transform(col("ps"), p => p.getField("mx").cast("float")).as("cv")))
+          col(vecCol), centroids, 1), 1).as("cell"))
+      val means = assigned
+        .select(col("cell"), posexplode(transform(col("v"),
+          x => floor(x.cast("double") * lit(1048576.0)).cast("long"))).as(Seq("pos", "qx")))
+        .groupBy(col("cell"), col("pos"))
+        .agg(floor(sum(col("qx")).cast("double") / count(lit(1))).cast("long").as("mq"))
+        .groupBy(col("cell"))
+        .agg(sort_array(collect_list(struct(col("pos"), col("mq")))).as("ps"))
+        .select(col("cell"), transform(col("ps"),
+          p => (p.getField("mq").cast("double") / lit(1048576.0)).cast("float")).as("cv"))
         .collect().map(r => r.getInt(0) -> r.getSeq[Float](1).toArray).toMap
       centroids = centroids.indices.map(i => means.getOrElse(i, centroids(i))).toArray
       it += 1
@@ -387,8 +364,8 @@ object Similarity {
   /** Product-quantization codebooks: the embedding space is split
     * into `m` contiguous subspaces of `dim / m` dims and each gets
     * its own `ksub`-codeword quantizer, trained with the same
-    * distributed (and, with `portable = true`, integer-exact
-    * oracle-reproducible) Lloyd iteration as [[trainIvfCentroids]] —
+    * distributed, integer-exact, oracle-reproducible Lloyd iteration
+    * as [[trainIvfCentroids]] —
     * per subspace, over the sliced subvectors. Returns
     * `m x ksub x (dim/m)` floats (a few KB — driver-held,
     * broadcast into encode/search as literals).
@@ -401,8 +378,8 @@ object Similarity {
     */
   def trainPqCodebooks(corpus: DataFrame, m: Int, ksub: Int, dim: Int,
                        iterations: Int = 1, idCol: String = "vec_id",
-                       vecCol: String = "embedding", seed: Long = 42L,
-                       portable: Boolean = false): Array[Array[Array[Float]]] = {
+                       vecCol: String = "embedding",
+                       seed: Long = 42L): Array[Array[Array[Float]]] = {
     require(m > 0 && dim % m == 0, s"dim $dim must divide into m $m subspaces")
     val dsub = dim / m
     // All m subspaces train in ONE init collect + ONE Lloyd
@@ -411,13 +388,11 @@ object Similarity {
     // Output is element-identical to per-subspace trainIvfCentroids:
     // the init sample orders by the id hash (same rows, sliced), and
     // the mean update groups by (j, cell, pos) with the same
-    // arithmetic (the portable path's integer means make this exact,
-    // which the sim_topk_pq oracle relies on).
+    // arithmetic (the integer means make this exact, which the
+    // sim_topk_pq oracle relies on).
     val initRows: Array[Array[Float]] = corpus
       .select(col(idCol).as("id"), col(vecCol).as("v"))
-      .orderBy(
-        (if (portable) Frames.portableHash(col("id"), seed) else xxhash64(lit(seed), col("id"))),
-        col("id"))
+      .orderBy(Frames.portableHash(col("id"), seed), col("id"))
       .limit(ksub)
       .collect().map(_.getSeq[Float](1).toArray)
     var codebooks: Array[Array[Array[Float]]] =
@@ -428,31 +403,20 @@ object Similarity {
         val sv = slice(col(vecCol), j * dsub + 1, dsub)
         struct(lit(j).as("j"),
           element_at(graft.functions.NativeFunctions.nearestCells(
-            sv, codebooks(j), 1, portable), 1).as("cell"),
+            sv, codebooks(j), 1), 1).as("cell"),
           sv.as("sv"))
       }
       val assigned = corpus.select(explode(array(subCols: _*)).as("s"))
         .select(col("s.j").as("j"), col("s.cell").as("cell"), col("s.sv").as("sv"))
-      val means =
-        (if (portable)
-          assigned
-            .select(col("j"), col("cell"), posexplode(transform(col("sv"),
-              x => floor(x.cast("double") * lit(1048576.0)).cast("long"))).as(Seq("pos", "qx")))
-            .groupBy(col("j"), col("cell"), col("pos"))
-            .agg(floor(sum(col("qx")).cast("double") / count(lit(1))).cast("long").as("mq"))
-            .groupBy(col("j"), col("cell"))
-            .agg(sort_array(collect_list(struct(col("pos"), col("mq")))).as("ps"))
-            .select(col("j"), col("cell"), transform(col("ps"),
-              p => (p.getField("mq").cast("double") / lit(1048576.0)).cast("float")).as("cv"))
-        else
-          assigned
-            .select(col("j"), col("cell"), posexplode(col("sv")).as(Seq("pos", "x")))
-            .groupBy(col("j"), col("cell"), col("pos"))
-            .agg(avg(col("x")).as("mx"))
-            .groupBy(col("j"), col("cell"))
-            .agg(sort_array(collect_list(struct(col("pos"), col("mx")))).as("ps"))
-            .select(col("j"), col("cell"),
-              transform(col("ps"), p => p.getField("mx").cast("float")).as("cv")))
+      val means = assigned
+        .select(col("j"), col("cell"), posexplode(transform(col("sv"),
+          x => floor(x.cast("double") * lit(1048576.0)).cast("long"))).as(Seq("pos", "qx")))
+        .groupBy(col("j"), col("cell"), col("pos"))
+        .agg(floor(sum(col("qx")).cast("double") / count(lit(1))).cast("long").as("mq"))
+        .groupBy(col("j"), col("cell"))
+        .agg(sort_array(collect_list(struct(col("pos"), col("mq")))).as("ps"))
+        .select(col("j"), col("cell"), transform(col("ps"),
+          p => (p.getField("mq").cast("double") / lit(1048576.0)).cast("float")).as("cv"))
         .collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Float](2).toArray).toMap
       codebooks = Array.tabulate(m)(j =>
         codebooks(j).indices.map(c => means.getOrElse((j, c), codebooks(j)(c))).toArray)
@@ -461,13 +425,12 @@ object Similarity {
     codebooks
   }
 
-  private def pqCodesExpr(codebooks: Array[Array[Array[Float]]], vecCol: String,
-                          portable: Boolean): Column = {
+  private def pqCodesExpr(codebooks: Array[Array[Array[Float]]], vecCol: String): Column = {
     val m = codebooks.length
     val dsub = codebooks(0)(0).length
     array((0 until m).map { j =>
       element_at(graft.functions.NativeFunctions.nearestCells(
-        slice(col(vecCol), j * dsub + 1, dsub), codebooks(j), 1, portable), 1)
+        slice(col(vecCol), j * dsub + 1, dsub), codebooks(j), 1), 1)
     }: _*)
   }
 
@@ -477,10 +440,9 @@ object Similarity {
     * (id, codes array<int>).
     */
   def pqEncode(df: DataFrame, codebooks: Array[Array[Array[Float]]],
-               idCol: String = "vec_id", vecCol: String = "embedding",
-               portable: Boolean = false): DataFrame =
+               idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
     df.select(col(idCol).as("id"),
-      pqCodesExpr(codebooks, vecCol, portable).as("codes"))
+      pqCodesExpr(codebooks, vecCol).as("codes"))
 
   /** Quantized flat codebook (entry j*ksub+c = codeword as
     * floor(x * 2^20) longs — dyadic-exact for trained centroids) and
@@ -500,11 +462,11 @@ object Similarity {
     */
   private def pqCodesWithNorm(corpus: DataFrame, codebooks: Array[Array[Array[Float]]],
                               nsqQ: Seq[Long], idCol: String, vecCol: String,
-                              portable: Boolean, extra: Seq[Column] = Nil): DataFrame = {
+                              extra: Seq[Column] = Nil): DataFrame = {
     val m = codebooks.length
     val ksub = codebooks(0).length
     corpus.select(Seq(col(idCol).as("id"),
-        pqCodesExpr(codebooks, vecCol, portable).as("codes")) ++ extra: _*)
+        pqCodesExpr(codebooks, vecCol).as("codes")) ++ extra: _*)
       .withColumn("nsq", aggregate(
         zip_with(col("codes"), sequence(lit(0), lit(m - 1)),
           (c, j) => get(typedLit(nsqQ), j * ksub + c)),
@@ -593,12 +555,12 @@ object Similarity {
   def pqTopK(corpus: DataFrame, queries: DataFrame, k: Int,
              codebooks: Array[Array[Array[Float]]],
              idCol: String = "vec_id", vecCol: String = "embedding",
-             excludeSelf: Boolean = true, portable: Boolean = false): DataFrame = {
+             excludeSelf: Boolean = true): DataFrame = {
     val m = codebooks.length
     val ksub = codebooks(0).length
     val dsub = codebooks(0)(0).length
     val (cbQ, nsqQ) = quantizedCodebook(codebooks)
-    val codes = pqCodesWithNorm(corpus, codebooks, nsqQ, idCol, vecCol, portable)
+    val codes = pqCodesWithNorm(corpus, codebooks, nsqQ, idCol, vecCol)
     val qtab = pqQueryTab(queries, cbQ, ksub, idCol, vecCol)
     val scored = codes.filter(col("nsq") > 0L)
       .join(broadcast(qtab),
@@ -622,20 +584,20 @@ object Similarity {
                 coarse: Array[Array[Float]], codebooks: Array[Array[Array[Float]]],
                 nProbe: Int, shortlist: Int,
                 idCol: String = "vec_id", vecCol: String = "embedding",
-                excludeSelf: Boolean = true, portable: Boolean = false): DataFrame = {
+                excludeSelf: Boolean = true): DataFrame = {
     require(shortlist >= k, "shortlist must be >= k")
     import graft.functions.NativeFunctions.nearestCells
     val m = codebooks.length
     val ksub = codebooks(0).length
     val dsub = codebooks(0)(0).length
     val (cbQ, nsqQ) = quantizedCodebook(codebooks)
-    val codes = pqCodesWithNorm(corpus, codebooks, nsqQ, idCol, vecCol, portable,
-      extra = Seq(element_at(nearestCells(col(vecCol), coarse, 1, portable), 1).as("cell")))
+    val codes = pqCodesWithNorm(corpus, codebooks, nsqQ, idCol, vecCol,
+      extra = Seq(element_at(nearestCells(col(vecCol), coarse, 1), 1).as("cell")))
     // probes (query_id, cell) and tables (query_id, tab) broadcast
     // SEPARATELY: joining the m*ksub-long table onto the exploded
     // probe rows first would ship it nProbe times per query
     val probes = queries.select(col(idCol).as("query_id"),
-      explode(nearestCells(col(vecCol), coarse, nProbe, portable)).as("cell"))
+      explode(nearestCells(col(vecCol), coarse, nProbe)).as("cell"))
     val qtab = pqQueryTab(queries, cbQ, ksub, idCol, vecCol)
     val short = topKPerKey(
       codes.filter(col("nsq") > 0L)
@@ -668,10 +630,10 @@ object Similarity {
   def pqTopKReranked(corpus: DataFrame, queries: DataFrame, k: Int,
                      codebooks: Array[Array[Array[Float]]], shortlist: Int,
                      idCol: String = "vec_id", vecCol: String = "embedding",
-                     excludeSelf: Boolean = true, portable: Boolean = false): DataFrame = {
+                     excludeSelf: Boolean = true): DataFrame = {
     require(shortlist >= k, "shortlist must be >= k")
     val short = pqTopK(corpus, queries, shortlist, codebooks, idCol, vecCol,
-        excludeSelf, portable)
+        excludeSelf)
       .select(col("query_id"), col("id"))
     exactRerank(short, corpus, queries, k, idCol, vecCol)
   }
@@ -691,17 +653,16 @@ object Similarity {
     */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
               centroids: Array[Array[Float]], nProbe: Int = 4,
-              idCol: String = "vec_id", vecCol: String = "embedding",
-              portable: Boolean = false): DataFrame = {
+              idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     import graft.functions.NativeFunctions.nearestCells
     // both sides are map-only expressions: cell assignment (nProbe=1)
     // and query probe cells (top-nProbe) come from the same native
     // single-pass ranking — the only shuffle left is the cell equi-join
     // and the per-query top-k reduction
     val assigned = corpus.select(col(idCol).as("id"), col(vecCol).as("cvv"),
-      element_at(nearestCells(col(vecCol), centroids, 1, portable), 1).as("cell"))
+      element_at(nearestCells(col(vecCol), centroids, 1), 1).as("cell"))
     val qProbes = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-        explode(nearestCells(col(vecCol), centroids, nProbe, portable)).as("cell"))
+        explode(nearestCells(col(vecCol), centroids, nProbe)).as("cell"))
     val scored = assigned.join(qProbes, Seq("cell"))
       .filter(col("id") =!= col("query_id"))
       .select(col("query_id"), col("id"), cosine(col("qv"), col("cvv")).as("cos"))
@@ -850,7 +811,7 @@ object Similarity {
   def ivfSqTopK(corpus: DataFrame, queries: DataFrame, k: Int,
                 coarse: Array[Array[Float]], nProbe: Int, shortlist: Int,
                 idCol: String = "vec_id", vecCol: String = "embedding",
-                excludeSelf: Boolean = true, portable: Boolean = false): DataFrame = {
+                excludeSelf: Boolean = true): DataFrame = {
     require(shortlist >= k, "shortlist must be >= k")
     import graft.functions.NativeFunctions.nearestCells
     def codeNormSq(codes: Column): Column =
@@ -864,9 +825,9 @@ object Similarity {
       .select(col(idCol).as("id"),
         transform(col("codes"), _.cast(FloatType)).as("ccf"),
         codeNormSq(col("codes")).as("nc"),
-        element_at(nearestCells(col(vecCol), coarse, 1, portable), 1).as("cell"))
+        element_at(nearestCells(col(vecCol), coarse, 1), 1).as("cell"))
     val probes = queries.select(col(idCol).as("query_id"),
-      explode(nearestCells(col(vecCol), coarse, nProbe, portable)).as("cell"))
+      explode(nearestCells(col(vecCol), coarse, nProbe)).as("cell"))
     val qcodes = Embeddings.quantizeInt8(queries, vecCol)
       .select(col(idCol).as("query_id"),
         transform(col("codes"), _.cast(FloatType)).as("qcf"),
@@ -915,8 +876,7 @@ object Similarity {
   def centroidPrototypicality(vecs: DataFrame,
                               centroids: Array[Array[Float]],
                               idCol: String = "vec_id",
-                              vecCol: String = "embedding",
-                              portable: Boolean = false): DataFrame = {
+                              vecCol: String = "embedding"): DataFrame = {
     require(centroids.nonEmpty, "centroids must be non-empty")
     val spark = vecs.sparkSession
     import spark.implicits._
@@ -924,7 +884,7 @@ object Similarity {
       .toSeq.toDF("cell", "cv")
     vecs.select(col(idCol).as("id"), col(vecCol).as("v"),
         element_at(graft.functions.NativeFunctions.nearestCells(col(vecCol),
-          centroids, 1, portable), 1).as("cell"))
+          centroids, 1), 1).as("cell"))
       .join(broadcast(cdf), Seq("cell"))
       .select(col("id"), col("cell"),
         floor(cosine(col("v"), col("cv")) * lit(1000000.0))

@@ -55,8 +55,7 @@ object WdTmdb {
       fields = Seq("external_source" -> lit(externalIdType),
         "api_key" -> lit(src.apiKey))))
     Http.request(prepared, "request",
-        Http.Options(logGroup = s"tmdb/find", okStatuses = Set(200, 404),
-          retryCount = 3),
+        Http.Options(logGroup = s"tmdb/find", okStatuses = Set(200, 404)),
         src.transport)
       .withColumn("tmdb_id",
         from_json(Http.responseText(col("response")), FindResponseSchema)
@@ -74,8 +73,7 @@ object WdTmdb {
       url = fmt(s"{}/3/{}/{}", lit(src.apiBase), lit(tmdbType), col(idCol)),
       fields = Seq("api_key" -> lit(src.apiKey))))
     Http.request(prepared, "request",
-        Http.Options(logGroup = s"tmdb/$tmdbType", okStatuses = Set(200, 404),
-          retryCount = 3),
+        Http.Options(logGroup = s"tmdb/$tmdbType", okStatuses = Set(200, 404)),
         src.transport)
       .withColumn(existsCol,
         from_json(Http.responseText(col("response")),

@@ -20,10 +20,10 @@ object Wikidata {
 
   val BlockedPageId = 103442925
 
-  private def extractSchema(pageId: Int): StructType =
+  private val extractSchema: StructType =
     StructType(Seq(StructField("query", StructType(Seq(
       StructField("pages", StructType(Seq(
-        StructField(pageId.toString, StructType(Seq(
+        StructField(BlockedPageId.toString, StructType(Seq(
           StructField("extract", StringType))))))))))))
 
   /** The blocklist as a 1-column sorted DataFrame of Q-ids.
@@ -33,10 +33,9 @@ object Wikidata {
   def blockedQidsFrame(spark: SparkSession, apiBase: String,
                        transport: Http.Transport = Http.JdkTransport,
                        userAgent: String = "GraftBot/1.0",
-                       minTimeMs: Long = 60000L,
-                       pageId: Int = BlockedPageId): DataFrame = {
+                       minTimeMs: Long = 60000L): DataFrame = {
     import spark.implicits._
-    val base = Seq(pageId).toDF("pageids")
+    val base = Seq(BlockedPageId).toDF("pageids")
       .withColumn("request", Http.prepareRequest(
         url = lit(s"$apiBase/w/api.php"),
         fields = Seq(
@@ -47,14 +46,14 @@ object Wikidata {
           "explaintext" -> lit("1")),
         headers = Seq("User-Agent" -> lit(userAgent))))
     val responded = Http.request(base, "request",
-      Http.Options(logGroup = "wikidata", retryCount = 3,
-        badStatuses = Set(403, 429), minTimeMs = minTimeMs),
+      Http.Options(logGroup = "wikidata", badStatuses = Set(403, 429),
+        minTimeMs = minTimeMs),
       transport)
     responded
       .select(extractAll(
-        from_json(Http.responseText(col("response")), extractSchema(pageId))
+        from_json(Http.responseText(col("response")), extractSchema)
           .getField("query").getField("pages")
-          .getField(pageId.toString).getField("extract"),
+          .getField(BlockedPageId.toString).getField("extract"),
         "(Q[0-9]+)").as("qid"))
       .select(explode(col("qid")).as("qid"))
       .orderBy(col("qid"))

@@ -254,27 +254,20 @@ object DocStreams {
                         corpusTextCol: String = "text",
                         numHashes: Int = 64, bands: Int = 16,
                         shingleWidth: Int = 3, threshold: Double = 0.8,
-                        seed: Long = 42L, portable: Boolean = false,
                         tsCol: String = "ts",
                         watermarkSeconds: Option[Long] = None): DataFrame = {
     require(numHashes % bands == 0, "numHashes must divide into bands")
     val r = numHashes / bands
     val (index, sets) = Dedup.nearDupIndex(corpus, corpusIdCol, corpusTextCol,
-      numHashes, bands, shingleWidth, seed, portable)
-    val sh =
-      if (portable)
-        graft.functions.NativeFunctions.polyShingleHashes(
-          Dedup.tokens(col(textCol)), shingleWidth)
-      else Dedup.shingleHashes(col(textCol), shingleWidth)
+      numHashes, bands, shingleWidth)
+    val sh = graft.functions.NativeFunctions.polyShingleHashes(
+      Dedup.tokens(col(textCol)), shingleWidth)
     val withWm = watermarkSeconds.fold(docs)(w =>
       docs.withWatermark(tsCol, s"$w seconds"))
     val sig = withWm
       .select(col(idCol).as("id"), col(tsCol).as("ts"), sh.as("sh"))
-      .withColumn("sig", graft.functions.NativeFunctions.minhashSignature(
-        col("sh"), numHashes, seed, portable))
-      .withColumn("bk",
-        if (portable) Dedup.lshBucketsPoly(col("sig"), bands, r)
-        else Dedup.lshBuckets(col("sig"), bands, r))
+      .withColumn("sig", Dedup.minhashSignature(col("sh"), numHashes))
+      .withColumn("bk", Dedup.lshBucketsPoly(col("sig"), bands, r))
     val flagged = sig
       .select(col("id"), col("ts"), col("sh"), explode(col("bk")).as("b"))
       .select(col("id"), col("ts"), col("sh"), col("b.band"), col("b.bucket"))
@@ -542,7 +535,7 @@ object DocStreams {
     *
     * {{{
     * val m = new IvfIndexMaintainer(spark, prefix, "vec_id",
-    *   "embedding", centroids, portable = true)
+    *   "embedding", centroids)
     * stream.writeStream.foreachBatch(m.appendBatch _).start()
     * ...
     * IvfIndex.ivfTopKFromIndex(spark, prefix, panel, k, centroids, ...)
@@ -565,7 +558,6 @@ object DocStreams {
                                  prefix: String, idCol: String,
                                  vecCol: String,
                                  centroids: Array[Array[Float]],
-                                 portable: Boolean = false,
                                  retrainEveryAppends: Int = 0,
                                  retrainCentroids: Int = 0) {
     import graft.operators.IvfIndex
@@ -601,7 +593,7 @@ object DocStreams {
       // retried pre-retrain batchId still ledger-hits after the flip
       if (IvfIndex.lineageHasTag(sp, serving, tag)) return // retry: done
       IvfIndex.appendToIvfIndex(sp, serving, batch, idCol, vecCol,
-        servingCents, portable, lineageTag = tag)
+        servingCents, lineageTag = tag)
       Seq("assign", "ids", "stats", "iddigest")
         .foreach(t => spark.catalog.refreshTable(s"${serving}_$t"))
       appendsSinceRetrain += 1
@@ -621,8 +613,7 @@ object DocStreams {
       synchronized {
         val n = if (retrainCentroids > 0) retrainCentroids
                 else servingCents.length
-        val (np, nc) = IvfIndex.ivfRetrainCached(sp, serving, n,
-          portable = portable)
+        val (np, nc) = IvfIndex.ivfRetrainCached(sp, serving, n)
         serving = np
         servingCents = nc
         appendsSinceRetrain = 0

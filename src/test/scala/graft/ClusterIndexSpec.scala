@@ -24,7 +24,7 @@ class ClusterIndexSpec extends AnyFunSuite {
                          threshold: Double = 0.5,
                          bands: Int = 16): Map[Long, Long] = {
     val pairs = Dedup.minhashNearDupPairs(corpus, "doc_id", "text",
-      bands = bands, threshold = threshold, portable = true)
+      bands = bands, threshold = threshold)
     Dedup.connectedComponents(corpus.select(col("doc_id").as("id")), pairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
   }
@@ -36,7 +36,7 @@ class ClusterIndexSpec extends AnyFunSuite {
     val d1 = d.filter(col("doc_id") % 3 === 1)
     val d2 = d.filter(col("doc_id") % 3 === 2)
     ClusterIndex.buildClusterIndex(base, "doc_id", "text", "t_clidx",
-      threshold = 0.5, portable = true)
+      threshold = 0.5)
     ClusterIndex.appendToClusterIndex(spark, "t_clidx", d1, "doc_id", "text")
     ClusterIndex.appendToClusterIndex(spark, "t_clidx", d2, "doc_id", "text")
     val inc = assignments("t_clidx")
@@ -52,7 +52,7 @@ class ClusterIndexSpec extends AnyFunSuite {
   // Crafted-fixture texts: a bridge doc's Jaccard to either side is
   // necessarily < 0.5 (it contains both), so candidate recall needs
   // 32 bands of 2 (P[collide] at J=0.45 is ~1-3e-5 per pair, and the
-  // portable seed makes the outcome fixed, not flaky); the threshold
+  // fixed hash family makes the outcome fixed, not flaky); the threshold
   // sits below the bridge's exact Jaccard so verification keeps it.
   private val FixtureBands = 32
   private val aText = ("a1 a2 a3 a4 a5 a6 a7 a8 a9 a10 a11 a12 " +
@@ -75,7 +75,7 @@ class ClusterIndexSpec extends AnyFunSuite {
       (30L, "totally unrelated content nothing shared here at all")
     ).toDF("doc_id", "text")
     ClusterIndex.buildClusterIndex(base, "doc_id", "text", "t_clbr",
-      threshold = 0.3, bands = FixtureBands, portable = true)
+      threshold = 0.3, bands = FixtureBands)
     val before = assignments("t_clbr")
     assert(before(10L) === before(11L))
     assert(before(20L) === before(21L))
@@ -104,7 +104,7 @@ class ClusterIndexSpec extends AnyFunSuite {
       (100L, aText), (200L, bText), (300L, cText)
     ).toDF("doc_id", "text")
     ClusterIndex.buildClusterIndex(base, "doc_id", "text", "t_clch",
-      threshold = 0.3, bands = FixtureBands, portable = true)
+      threshold = 0.3, bands = FixtureBands)
     val b1 = Seq((400L, aText + " " + bText)).toDF("doc_id", "text")
     ClusterIndex.appendToClusterIndex(spark, "t_clch", b1, "doc_id", "text")
     val b2 = Seq((500L, bText + " " + cText)).toDF("doc_id", "text")
@@ -126,7 +126,7 @@ class ClusterIndexSpec extends AnyFunSuite {
     cleanup("t_clcl")
     val d = docs.limit(60).cache(); d.count()
     ClusterIndex.buildClusterIndex(d, "doc_id", "text", "t_clcl",
-      threshold = 0.5, portable = true)
+      threshold = 0.5)
     val remapBefore = spark.table("t_clcl_remap").count()
     val fresh = Seq(
       (900001L, "qq ww ee rr tt yy uu ii oo pp"),
@@ -145,7 +145,7 @@ class ClusterIndexSpec extends AnyFunSuite {
       (100L, aText), (200L, bText), (300L, cText)
     ).toDF("doc_id", "text")
     ClusterIndex.buildClusterIndex(base, "doc_id", "text", "t_clcp",
-      threshold = 0.3, bands = FixtureBands, portable = true)
+      threshold = 0.3, bands = FixtureBands)
     ClusterIndex.appendToClusterIndex(spark, "t_clcp",
       Seq((400L, aText + " " + bText)).toDF("doc_id", "text"),
       "doc_id", "text")
@@ -177,7 +177,7 @@ class ClusterIndexSpec extends AnyFunSuite {
     cleanup("t_cltorn")
     val d = docs.limit(40).cache(); d.count()
     ClusterIndex.buildClusterIndex(d, "doc_id", "text", "t_cltorn",
-      threshold = 0.5, portable = true)
+      threshold = 0.5)
     spark.range(1).select(lit("x").as("entry"), lit(0L).as("n_docs_before"))
       .write.mode("overwrite").saveAsTable("t_cltorn_intent")
     assert(intercept[IllegalArgumentException] {
@@ -194,7 +194,7 @@ class ClusterIndexSpec extends AnyFunSuite {
     cleanup("t_clre")
     val d = docs.limit(40).cache(); d.count()
     ClusterIndex.buildClusterIndex(d, "doc_id", "text", "t_clre",
-      threshold = 0.5, portable = true)
+      threshold = 0.5)
     assert(intercept[IllegalArgumentException] {
       ClusterIndex.appendToClusterIndex(spark, "t_clre", d.limit(1),
         "doc_id", "text")

@@ -161,16 +161,6 @@ class DedupSpec extends AnyFunSuite {
     }
   }
 
-  test("portable simhash is deterministic and pairs-equivalent on near-dups") {
-    val df = Seq((1L, "alpha beta gamma delta epsilon zeta eta theta"),
-                 (2L, "alpha beta gamma delta epsilon zeta eta iota"),
-                 (3L, "alpha beta gamma delta epsilon zeta eta theta")).toDF("doc_id", "text")
-    val sigs = df.select(col("doc_id"), Dedup.simhash(col("text"), portable = true).as("s"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(sigs(1L) === sigs(3L))
-    assert(java.lang.Long.bitCount(sigs(1L) ^ sigs(2L)) < 20)
-  }
-
   test("lineDedup keeps first occurrence per exact line, exempts blanks") {
     val df = Seq(
       (1L, "alpha\n\nshared line\nunique one"),
@@ -186,17 +176,17 @@ class DedupSpec extends AnyFunSuite {
     assert(out(3L) === (("", 0L, 1L)))
   }
 
-  test("portable minhash agrees with exact ngram-jaccard pairs and values") {
+  test("minhash agrees with exact ngram-jaccard pairs and values") {
     val docs = Tables.table(spark, TestSpark.sfDir, "documents")
     def key(df: org.apache.spark.sql.DataFrame) = df.select("id_a", "id_b", "jaccard")
       .collect().map(r => (r.getLong(0), r.getLong(1), math.round(r.getDouble(2) * 1e9))).toSet
     val exact = key(Dedup.ngramJaccardPairs(docs, "doc_id", "text", 3, 0.5))
-    val portable = key(Dedup.minhashNearDupPairs(docs, "doc_id", "text",
-      64, 16, 3, 0.5, portable = true))
+    val minhash = key(Dedup.minhashNearDupPairs(docs, "doc_id", "text",
+      64, 16, 3, 0.5))
     // poly hashes are distinct per shingle on this corpus, so the
     // verified jaccard VALUES must equal the exact n-gram ones, not
     // just the pair set
-    assert(portable === exact, s"portable minhash diverged: missed ${exact -- portable}")
+    assert(minhash === exact, s"minhash diverged: missed ${exact -- minhash}")
   }
 
   test("simhash: identical texts hash identically, near-dups are close") {
@@ -342,7 +332,7 @@ class DedupSpec extends AnyFunSuite {
     val docs = Tables.table(spark, TestSpark.sfDir, "documents")
       .select(col("doc_id"), col("text")).limit(200)
     val card = Dedup.bbitMinhashCard(docs, "doc_id", "text",
-      portable = true, bits = Seq(4, 1))
+      bits = Seq(4, 1))
     val rows = card.collect()
     assert(rows.nonEmpty, "the corpus carries near-dup candidates")
     rows.foreach { r =>
@@ -367,7 +357,7 @@ class DedupSpec extends AnyFunSuite {
     assert(mae < 250000L, s"full-minhash MAE $mae too high")
     // deterministic under repartition
     val again = Dedup.bbitMinhashCard(docs.repartition(17), "doc_id", "text",
-        portable = true, bits = Seq(4, 1))
+        bits = Seq(4, 1))
       .collect().map(_.toSeq).toSet
     assert(again === rows.map(_.toSeq).toSet)
   }

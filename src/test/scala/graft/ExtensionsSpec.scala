@@ -20,17 +20,27 @@ class ExtensionsSpec extends AnyFunSuite {
       "SELECT simhash(array('a','b','c')) AS s, simhash(array('a','b','c')) AS s2")
       .head()
     assert(sh.getLong(0) === sh.getLong(1))
+    // the one SimHash family, replayed on the JVM: each token hashes to
+    // two code-point polynomial folds, poly1 * 2^30 + poly2, and bit b
+    // is set where most tokens have it set
+    def poly(t: String, m: Long): Long =
+      t.codePoints().toArray.foldLeft(0L)((a, c) => (a * m + c) % 1000000007L)
+    val hs = Seq("a", "b", "c").map(t => poly(t, 1000003L) * 1073741824L + poly(t, 1000033L))
+    val expected = (0 until 63)
+      .filter(b => hs.count(h => ((h >>> b) & 1L) == 1L) * 2 > hs.size)
+      .map(1L << _).sum
+    assert(sh.getLong(0) === expected)
 
     val mh = spark.sql(
-      "SELECT size(minhash_signature(array(1L, 2L, 3L), 16, 42L)) AS n")
+      "SELECT size(minhash_signature(array(1L, 2L, 3L), 16)) AS n")
       .head().getInt(0)
     assert(mh === 16)
 
     // degenerate inputs: NULL signature (documented divergence from
     // the HOF twin, which yields an array of nulls)
     val degenerate = spark.sql(
-      "SELECT minhash_signature(array(), 16, 42L) AS e, " +
-        "minhash_signature(array(CAST(NULL AS BIGINT)), 16, 42L) AS a")
+      "SELECT minhash_signature(array(), 16) AS e, " +
+        "minhash_signature(array(CAST(NULL AS BIGINT)), 16) AS a")
       .head()
     assert(degenerate.isNullAt(0) && degenerate.isNullAt(1))
 

@@ -71,16 +71,54 @@ class HttpSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("bad status retries until ok (500 -> 200 rotation)") {
     val df = req(Seq(Some(s"${stub.base}/status/500,200")))
     val out = Http.request(df, "request",
-      Http.Options(okStatuses = Set(200), badStatuses = Set(500), retryCount = 3))
+      Http.Options(okStatuses = Set(200), badStatuses = Set(500)))
     assert(out.head().getStruct(2).getInt(0) === 200)
   }
 
-  test("non-ok status without retries throws") {
+  test("non-ok status throws once its tries are spent") {
     val df = req(Seq(Some(s"${stub.base}/status/500")))
+    val t0 = System.nanoTime()
     val e = intercept[org.apache.spark.SparkException] {
       Http.request(df, "request", Http.Options()).collect()
     }
     assert(e.getMessage.contains("HTTP 500") || e.getCause != null)
+    // three tries: 1 s + 2 s of backoff between them
+    val elapsedMs = (System.nanoTime() - t0) / 1000000
+    assert(elapsedMs >= 3000, s"gave up after only ${elapsedMs}ms")
+  }
+
+  test("each ::group:: is closed by exactly one ::endgroup::, on success and failure") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val logger = LogManager.getLogger("graft.http").asInstanceOf[Logger]
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("http-groups", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = seen.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val oldLevel = logger.getLevel
+    logger.addAppender(appender)
+    logger.setLevel(Level.INFO)
+    try {
+      Http.request(req(Seq(Some(s"${stub.base}/get?grp=1"))), "request",
+        Http.Options(logGroup = "groups-ok")).collect()
+      intercept[org.apache.spark.SparkException] {
+        Http.request(req(Seq(Some(s"${stub.base}/status/500"))), "request",
+          Http.Options(logGroup = "groups-fail")).collect()
+      }
+    } finally {
+      logger.removeAppender(appender)
+      logger.setLevel(oldLevel)
+      appender.stop()
+    }
+    import scala.jdk.CollectionConverters._
+    val marks = seen.asScala.toSeq
+      .filter(m => m.startsWith("::group::") || m == "::endgroup::")
+    assert(marks === Seq("::group::groups-ok", "::endgroup::",
+      "::group::groups-fail", "::endgroup::"), marks)
   }
 
   test("404 can be declared ok (tmdb_exists pattern)") {

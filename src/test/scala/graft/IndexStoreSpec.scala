@@ -15,7 +15,7 @@ class IndexStoreSpec extends AnyFunSuite {
     val e = Tables.table(spark, TestSpark.sfDir, "embeddings")
     val n = Similarity.suggestedCentroids(e.count())
     val trained = Similarity.trainIvfCentroids(e, n, dim = 64,
-      iterations = 1, portable = true)
+      iterations = 1)
     val path = tmpDir() + "/ivf"
     IndexStore.saveIvfCentroids(spark, trained, path)
     assert(IndexStore.exists(path))
@@ -27,9 +27,9 @@ class IndexStoreSpec extends AnyFunSuite {
       loaded(i).map(java.lang.Float.floatToIntBits)
         .sameElements(trained(i).map(java.lang.Float.floatToIntBits)),
       s"centroid $i diverged through the artifact"))
-    val a = Similarity.ivfTopK(e, e, k = 1, trained, nProbe = 4, portable = true)
+    val a = Similarity.ivfTopK(e, e, k = 1, trained, nProbe = 4)
       .select(col("query_id"), col("id")).orderBy(col("query_id")).collect()
-    val b = Similarity.ivfTopK(e, e, k = 1, loaded, nProbe = 4, portable = true)
+    val b = Similarity.ivfTopK(e, e, k = 1, loaded, nProbe = 4)
       .select(col("query_id"), col("id")).orderBy(col("query_id")).collect()
     assert(a.sameElements(b), "loaded-artifact search diverged from inline-trained")
   }
@@ -38,14 +38,14 @@ class IndexStoreSpec extends AnyFunSuite {
     val e = Tables.table(spark, TestSpark.sfDir, "embeddings").limit(300)
     val n = 16
     val trained = Similarity.trainIvfCentroids(e, n, dim = 64,
-      iterations = 1, portable = true)
+      iterations = 1)
     val base = tmpDir()
-    val served = IndexStore.ivfCentroidsCached(e, n, 64, base, portable = true)
+    val served = IndexStore.ivfCentroidsCached(e, n, 64, base)
     val a = Similarity.ivfSqTopK(e, e, k = 1, trained, nProbe = 4,
-        shortlist = 8, portable = true)
+        shortlist = 8)
       .select(col("query_id"), col("id")).orderBy(col("query_id")).collect()
     val b = Similarity.ivfSqTopK(e, e, k = 1, served, nProbe = 4,
-        shortlist = 8, portable = true)
+        shortlist = 8)
       .select(col("query_id"), col("id")).orderBy(col("query_id")).collect()
     assert(a.sameElements(b), "served IVF-SQ8 diverged from inline-trained")
   }
@@ -53,7 +53,7 @@ class IndexStoreSpec extends AnyFunSuite {
   test("PQ codebook artifact round-trips bit-for-bit") {
     val e = Tables.table(spark, TestSpark.sfDir, "embeddings").limit(200)
     val cbs = Similarity.trainPqCodebooks(e, m = 8, ksub = 16, dim = 64,
-      iterations = 1, portable = true)
+      iterations = 1)
     val path = tmpDir() + "/pq"
     IndexStore.savePqCodebooks(spark, cbs, path)
     val loaded = IndexStore.loadPqCodebooks(spark, path, m = 8, ksub = 16, dsub = 8)
@@ -67,7 +67,7 @@ class IndexStoreSpec extends AnyFunSuite {
     val e = Tables.table(spark, TestSpark.sfDir, "embeddings").limit(300)
     val base = tmpDir()
     val n = 16
-    val first = IndexStore.ivfCentroidsCached(e, n, 64, base, portable = true)
+    val first = IndexStore.ivfCentroidsCached(e, n, 64, base)
     // exactly one artifact dir materialized under the base
     val entries = java.nio.file.Files.list(java.nio.file.Paths.get(base))
       .iterator()
@@ -80,11 +80,11 @@ class IndexStoreSpec extends AnyFunSuite {
     val mutated = first.map(_.clone())
     mutated(0)(0) = mutated(0)(0) + 1.0f
     IndexStore.saveIvfCentroids(spark, mutated, dirs.head.toString)
-    val second = IndexStore.ivfCentroidsCached(e, n, 64, base, portable = true)
+    val second = IndexStore.ivfCentroidsCached(e, n, 64, base)
     assert(second(0)(0) === first(0)(0) + 1.0f,
       "cached call retrained instead of loading the artifact")
     // and a different corpus misses the cache (fingerprint key)
-    IndexStore.ivfCentroidsCached(e.limit(200), 16, 64, base, portable = true)
+    IndexStore.ivfCentroidsCached(e.limit(200), 16, 64, base)
     val after = java.nio.file.Files.list(java.nio.file.Paths.get(base))
       .iterator()
     val dirs2 = Iterator.continually(after).takeWhile(_.hasNext).map(_.next()).toList

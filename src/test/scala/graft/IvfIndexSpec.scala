@@ -145,18 +145,18 @@ class IvfIndexSpec extends AnyFunSuite {
     val base = e.filter(col("vec_id") % 4 =!= 0)
     val delta = e.filter(col("vec_id") % 4 === 0)
     val baseCents = Similarity.trainIvfCentroids(base,
-      nCentroids = 8, dim = 64, iterations = 1, portable = true)
+      nCentroids = 8, dim = 64, iterations = 1)
     val drifted = IvfIndex.ivfAppendCached(base, delta, "vec_id",
-      "embedding", baseCents, portable = true)
+      "embedding", baseCents)
     val statsBefore = spark.table(s"${drifted}_stats").head()
     val (rt, cents) = IvfIndex.ivfRetrainCached(spark, drifted,
-      nCentroids = 8, portable = true)
+      nCentroids = 8)
     // the retrained child equals a one-shot build over the full corpus
     // at the SAME retrained centroids: training from the index's own
     // (id, vec) rows is order-insensitive and integer-exact, so the
     // centroids equal full-corpus training too
     val fresh = Similarity.trainIvfCentroids(e, nCentroids = 8, dim = 64,
-      iterations = 1, portable = true)
+      iterations = 1)
     assert(IvfIndex.centroidFingerprint(cents) ===
       IvfIndex.centroidFingerprint(fresh),
       "retrained centroids diverged from fresh full-corpus training")
@@ -175,7 +175,7 @@ class IvfIndexSpec extends AnyFunSuite {
     // cached retrain is idempotent: second call loads, same prefix
     val statsRt = spark.table(s"${rt}_stats").head()
     val (rt2, cents2) = IvfIndex.ivfRetrainCached(spark, drifted,
-      nCentroids = 8, portable = true)
+      nCentroids = 8)
     assert(rt2 === rt && spark.table(s"${rt}_stats").head() === statsRt)
     assert(IvfIndex.centroidFingerprint(cents2) ===
       IvfIndex.centroidFingerprint(cents))
@@ -259,25 +259,23 @@ class IvfIndexSpec extends AnyFunSuite {
         typedLit(hot).as("embedding"))
     val skew = e0.unionByName(copies).cache(); skew.count()
     val cents = Similarity.trainIvfCentroids(skew, nCentroids = 8, dim = 64,
-      iterations = 1, idCol = "vec_id", vecCol = "embedding", portable = true)
-    IvfIndex.buildIvfIndex(skew, "vec_id", "embedding", cents, "ivfsk",
-      portable = true)
+      iterations = 1, idCol = "vec_id", vecCol = "embedding")
+    IvfIndex.buildIvfIndex(skew, "vec_id", "embedding", cents, "ivfsk")
     // the card flags at least the hot cell, covers every cell, and
     // its integer accounting closes
     val card = Similarity.ivfCellSkew(skew, "vec_id", "embedding", cents,
-      oversizeFactor = 2, portable = true).collect()
+      oversizeFactor = 2).collect()
     assert(card.length === cents.length)
     assert(card.map(_.getAs[Long]("n")).sum === 450L)
     assert(card.exists(_.getAs[Boolean]("oversized")), "hot cell not flagged")
     val maxBefore = card.map(_.getAs[Long]("n")).max
     // split: expanded centroids, new index under a NEW prefix
     val expanded = IvfIndex.splitOversizedCells(spark, "ivfsk", "ivfsksp",
-      cents, oversizeFactor = 2, seed = 7L, portable = true)
+      cents, oversizeFactor = 2, seed = 7L)
     assert(expanded.length > cents.length, "no cell was split")
     // equivalence: the split index == a fresh one-shot build over the
     // same vectors at the SAME expanded centroid set
-    IvfIndex.buildIvfIndex(skew, "vec_id", "embedding", expanded, "ivfskref",
-      portable = true)
+    IvfIndex.buildIvfIndex(skew, "vec_id", "embedding", expanded, "ivfskref")
     def assignRows(t: String) = spark.table(s"${t}_assign")
       .select(col("id"), col("cell")).orderBy("id").collect().toSeq
     assert(assignRows("ivfsksp") === assignRows("ivfskref"),
@@ -327,10 +325,10 @@ class IvfIndexSpec extends AnyFunSuite {
     val e0 = emb.limit(300).select(col("vec_id"), col("embedding"))
       .cache(); e0.count()
     val cents = Similarity.trainIvfCentroids(e0, nCentroids = 8, dim = 64,
-      iterations = 1, idCol = "vec_id", vecCol = "embedding", portable = true)
+      iterations = 1, idCol = "vec_id", vecCol = "embedding")
     import graft.functions.NativeFunctions.nearestCells
     val hots = e0.select(col("vec_id"), col("embedding"),
-        element_at(nearestCells(col("embedding"), cents, 1, portable = true),
+        element_at(nearestCells(col("embedding"), cents, 1),
           1).as("cell"))
       .orderBy(col("cell"), col("vec_id"))
       .collect().groupBy(_.getInt(2)).toSeq.sortBy(_._1).take(3)
@@ -341,8 +339,7 @@ class IvfIndexSpec extends AnyFunSuite {
         .as("vec_id"), typedLit(h.toSeq).as("embedding"))
     }.reduce(_ unionByName _)
     val skew = e0.unionByName(copies).cache(); skew.count()
-    IvfIndex.buildIvfIndex(skew, "vec_id", "embedding", cents, "ivfgs",
-      portable = true)
+    IvfIndex.buildIvfIndex(skew, "vec_id", "embedding", cents, "ivfgs")
     // reference: the pre-grouping formulation — one trainIvfCentroids
     // per oversized cell under seed+cell, children in cell order
     val assign = spark.table("ivfgs_assign")
@@ -356,7 +353,7 @@ class IvfIndexSpec extends AnyFunSuite {
       Similarity.trainIvfCentroids(
         assign.filter(col("cell") === c).select(col("id"), col("vec")),
         nCentroids = 2, dim = 64, iterations = 1,
-        idCol = "id", vecCol = "vec", seed = 7L + c, portable = true)
+        idCol = "id", vecCol = "vec", seed = 7L + c)
     }
     // count driver-blocking jobs during the grouped split
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -368,7 +365,7 @@ class IvfIndexSpec extends AnyFunSuite {
     spark.sparkContext.addSparkListener(listener)
     val expanded = try {
       val r = IvfIndex.splitOversizedCells(spark, "ivfgs", "ivfgssp",
-        cents, oversizeFactor = 1, seed = 7L, portable = true)
+        cents, oversizeFactor = 1, seed = 7L)
       Thread.sleep(1000L) // let queued JobStart events drain
       r
     } finally spark.sparkContext.removeSparkListener(listener)

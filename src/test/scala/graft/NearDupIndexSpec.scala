@@ -24,16 +24,14 @@ class NearDupIndexSpec extends AnyFunSuite {
       df.orderBy("delta_id", "corpus_id").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
     val inline = rows(Dedup.minhashNearDupPairsCross(delta, corpus,
-      "doc_id", "text", threshold = 0.5, portable = true))
+      "doc_id", "text", threshold = 0.5))
     assert(inline.nonEmpty, "test slice produced no near-dup pairs")
-    val prefix = NearDupIndex.nearDupIndexCached(corpus, "doc_id", "text",
-      portable = true)
+    val prefix = NearDupIndex.nearDupIndexCached(corpus, "doc_id", "text")
     val fromIdx = rows(NearDupIndex.gateNearDups(spark, prefix, delta,
       "doc_id", "text", threshold = 0.5))
     assert(fromIdx === inline, "index gate diverged from the inline cross")
     // cache hit serves the same prefix without a rebuild
-    assert(NearDupIndex.nearDupIndexCached(corpus, "doc_id", "text",
-      portable = true) === prefix)
+    assert(NearDupIndex.nearDupIndexCached(corpus, "doc_id", "text") === prefix)
   }
 
   test("append is invisible: gate over built+appended equals full rebuild") {
@@ -45,10 +43,8 @@ class NearDupIndexSpec extends AnyFunSuite {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("delta_id", "corpus_id").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    val merged = NearDupIndex.nearDupAppendCached(c1, c2, "doc_id", "text",
-      portable = true)
-    val full = NearDupIndex.nearDupIndexCached(corpus, "doc_id", "text",
-      portable = true)
+    val merged = NearDupIndex.nearDupAppendCached(c1, c2, "doc_id", "text")
+    val full = NearDupIndex.nearDupIndexCached(corpus, "doc_id", "text")
     val a = rows(NearDupIndex.gateNearDups(spark, merged, delta,
       "doc_id", "text", threshold = 0.5))
     val b = rows(NearDupIndex.gateNearDups(spark, full, delta,
@@ -56,8 +52,7 @@ class NearDupIndexSpec extends AnyFunSuite {
     assert(a.nonEmpty && a === b, "appended index diverged from the rebuild")
     // idempotent: the delta is in the lineage, a second call is a no-op
     val n1 = spark.table(s"${merged}_sets").count()
-    assert(NearDupIndex.nearDupAppendCached(c1, c2, "doc_id", "text",
-      portable = true) === merged)
+    assert(NearDupIndex.nearDupAppendCached(c1, c2, "doc_id", "text") === merged)
     assert(spark.table(s"${merged}_sets").count() === n1)
     // re-submitting an indexed doc id is loud
     assert(intercept[IllegalArgumentException] {
@@ -70,20 +65,19 @@ class NearDupIndexSpec extends AnyFunSuite {
     val d = docs.limit(40).cache(); d.count()
     val c1 = d.filter(col("doc_id") % 2 === 0)
     val c2 = d.filter(col("doc_id") % 2 === 1)
-    // same corpora, different shingleWidth / seed / portable must NOT
-    // collide on one cached index (the probe would silently use the
-    // first call's hashing)
-    val p1 = NearDupIndex.nearDupAppendCached(c1, c2, "doc_id", "text",
-      portable = true)
+    // same corpora, different shingleWidth / bands must NOT collide
+    // on one cached index (the probe would silently use the first
+    // call's hashing)
+    val p1 = NearDupIndex.nearDupAppendCached(c1, c2, "doc_id", "text")
     val p2 = NearDupIndex.nearDupAppendCached(c1, c2, "doc_id", "text",
-      shingleWidth = 4, portable = true)
+      shingleWidth = 4)
     val p3 = NearDupIndex.nearDupAppendCached(c1, c2, "doc_id", "text",
-      seed = 7L, portable = true)
+      bands = 32)
     assert(Set(p1, p2, p3).size === 3,
       "signature params missing from the cache key")
     // and each serves an index whose recorded params match the request
     assert(spark.table(s"${p2}_stats").head().getAs[Int]("shingle_w") === 4)
-    assert(spark.table(s"${p3}_stats").head().getAs[Long]("seed") === 7L)
+    assert(spark.table(s"${p3}_stats").head().getAs[Int]("bands") === 32)
   }
 
   private def digestWords(table: String): Seq[(Long, Long)] =
@@ -99,11 +93,10 @@ class NearDupIndexSpec extends AnyFunSuite {
       "id as doc_id",
       "concat('alpha w', id, ' beta w', id + 1, ' gamma w', id + 2, ' end') as text")
     val base = mk(0L, 60L); val delta = mk(60L, 90L)
-    NearDupIndex.buildNearDupIndex(base, "doc_id", "text", "ndu",
-      portable = true)
+    NearDupIndex.buildNearDupIndex(base, "doc_id", "text", "ndu")
     NearDupIndex.appendToNearDupIndex(spark, "ndu", delta, "doc_id", "text")
     NearDupIndex.buildNearDupIndex(base.unionByName(delta), "doc_id", "text",
-      "ndv", portable = true)
+      "ndv")
     assert(digestWords("ndu_bkdigest") === digestWords("ndv_bkdigest"),
       "O(delta) OR-union digest diverged from a full rebuild")
     cleanup("ndu"); cleanup("ndv")
@@ -118,13 +111,13 @@ class NearDupIndexSpec extends AnyFunSuite {
       "concat('tok', id, ' tok', id + 1, ' tok', id + 2, ' tok', id + 3) as text")
     val base = mk(0L, 1000L); val delta = mk(1000L, 1200L)
     NearDupIndex.buildNearDupIndex(base, "doc_id", "text", "ndr",
-      numHashes = 64, bands = 64, portable = true)
+      numHashes = 64, bands = 64)
     val before = spark.table("ndr_stats").head().getAs[Int]("digest_mbits")
     NearDupIndex.appendToNearDupIndex(spark, "ndr", delta, "doc_id", "text")
     val after = spark.table("ndr_stats").head().getAs[Int]("digest_mbits")
     assert(after === before * 2, s"expected a resize, got $before -> $after")
     NearDupIndex.buildNearDupIndex(base.unionByName(delta), "doc_id", "text",
-      "nds", numHashes = 64, bands = 64, portable = true)
+      "nds", numHashes = 64, bands = 64)
     assert(digestWords("ndr_bkdigest") === digestWords("nds_bkdigest"),
       "resize-boundary rebuild diverged from a fresh build")
     cleanup("ndr"); cleanup("nds")
@@ -135,7 +128,7 @@ class NearDupIndexSpec extends AnyFunSuite {
     NearDupIndex.buildNearDupIndex(
       Seq((1L, "the quick brown fox jumps over the lazy dog today"))
         .toDF("doc_id", "text"),
-      "doc_id", "text", "ndh", portable = true)
+      "doc_id", "text", "ndh")
     // the all-new fast path is BEHAVIORAL: with the postings and sets
     // tables dropped, a batch whose buckets the digest has never seen
     // still gates (to zero pairs) — the index is never read

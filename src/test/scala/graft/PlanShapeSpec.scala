@@ -428,7 +428,7 @@ class PlanShapeSpec extends AnyFunSuite {
     val toks = graft.operators.Dedup.tokens(col("text"))
     val docs = Tables.table(spark, TestSpark.sfDir, "documents")
     val df = docs.select(
-      graft.operators.Dedup.simhash(col("text"), portable = true).as("sh"),
+      graft.operators.Dedup.simhash(col("text")).as("sh"),
       polyShingleHashes(toks, 3).as("psh"),
       polyFingerprint(col("text")).as("fp"),
       minhashSignature(graft.operators.Dedup.shingleHashes(col("text"), 3), 16).as("sig"),
@@ -454,7 +454,6 @@ class PlanShapeSpec extends AnyFunSuite {
     val emb = Tables.table(spark, TestSpark.sfDir, "embeddings")
     val df = emb.select(
       rademacherBuckets(col("embedding"), 64, 6, 4).as("rb"),
-      hyperplaneBuckets(col("embedding"), 64, 6, 4).as("hb"),
       nearestCells(col("embedding"), cents, 2).as("cells"),
       cosineSim(col("embedding"), col("embedding")).as("self_sim"))
     val p = df.queryExecution.executedPlan.toString
@@ -507,12 +506,11 @@ class PlanShapeSpec extends AnyFunSuite {
     // With fallback off, the same bug fails loudly here.
     import graft.operators.Similarity
     val e = Tables.table(spark, TestSpark.sfDir, "embeddings")
-    val cbs = Similarity.trainPqCodebooks(e, m = 8, ksub = 16, dim = 64, portable = true)
+    val cbs = Similarity.trainPqCodebooks(e, m = 8, ksub = 16, dim = 64)
     val old = spark.conf.get("spark.sql.codegen.fallback")
     spark.conf.set("spark.sql.codegen.fallback", "false")
     try {
-      val n = Similarity.pqTopKReranked(e, e, k = 1, cbs, shortlist = 8,
-        portable = true).queryExecution.toRdd.count()
+      val n = Similarity.pqTopKReranked(e, e, k = 1, cbs, shortlist = 8).queryExecution.toRdd.count()
       assert(n > 0)
     } finally spark.conf.set("spark.sql.codegen.fallback", old)
   }
@@ -868,9 +866,9 @@ class PlanShapeSpec extends AnyFunSuite {
     import graft.operators.Similarity
     val e = Tables.table(spark, TestSpark.sfDir, "embeddings")
     val cents = Similarity.trainIvfCentroids(e, nCentroids = 16, dim = 64,
-      iterations = 1, portable = true)
+      iterations = 1)
     val df = Similarity.ivfTopK(e.filter(col("label") < 5), e, k = 1, cents,
-      nProbe = 4, portable = true)
+      nProbe = 4)
     val p = plan(df)
     assert(p.contains("LessThan(label,5)"),
       s"label predicate must reach the scan:\n$p")

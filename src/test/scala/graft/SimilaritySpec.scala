@@ -50,14 +50,6 @@ class SimilaritySpec extends AnyFunSuite {
     val hits = exact.count { case (q, nn) => approx.get(q).contains(nn) }
     val recall = hits.toDouble / exact.size
     assert(recall > 0.3, s"top-1 recall $recall too low")
-    // the portable Rademacher family must hold equivalent recall —
-    // signed random projections need sign symmetry, not normality
-    val portable = Similarity.lshTopK(e, e, k = 1, dim = 64, numPlanes = 6,
-        tables = 8, portable = true)
-      .select("query_id", "id").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val pRecall = exact.count { case (q, nn) =>
-      portable.get(q).contains(nn) }.toDouble / exact.size
-    assert(pRecall > 0.3, s"portable top-1 recall $pRecall too low")
   }
 
   test("sqTopK: full-corpus shortlist equals brute force exactly; suggested shortlist holds recall") {
@@ -116,9 +108,8 @@ class SimilaritySpec extends AnyFunSuite {
   test("semanticDedupPairs: verified subset of exact pairs, within-cell complete") {
     val e = Tables.table(spark, TestSpark.sfDir, "embeddings")
     val cents = Similarity.trainIvfCentroids(e,
-      Similarity.suggestedCentroids(e.count()), 64, 1, portable = true)
-    val sem = Similarity.semanticDedupPairs(e, "vec_id", "embedding", cents, 0.3,
-        portable = true)
+      Similarity.suggestedCentroids(e.count()), 64, 1)
+    val sem = Similarity.semanticDedupPairs(e, "vec_id", "embedding", cents, 0.3)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val a = e.select(col("vec_id").as("id_a"), col("embedding").as("va"))
     val b = e.select(col("vec_id").as("id_b"), col("embedding").as("vb"))
@@ -131,7 +122,7 @@ class SimilaritySpec extends AnyFunSuite {
     // sides share a cell and check they all surfaced
     import graft.functions.NativeFunctions
     val cells = e.select(col("vec_id"),
-      element_at(NativeFunctions.nearestCells(col("embedding"), cents, 1, portable = true), 1)
+      element_at(NativeFunctions.nearestCells(col("embedding"), cents, 1), 1)
         .as("cell")).collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     val sameCellExact = exact.filter { case (x, y) => cells(x) == cells(y) }
     assert(sem === sameCellExact,
@@ -165,19 +156,6 @@ class SimilaritySpec extends AnyFunSuite {
     assert(b1 === b2)
   }
 
-  test("native HyperplaneBuckets match per-table hyperplaneBucket HOF") {
-    val e = Tables.table(spark, TestSpark.sfDir, "embeddings").limit(30)
-    val native = e.select(col("vec_id"),
-      graft.functions.NativeFunctions.hyperplaneBuckets(col("embedding"), 64, 6, 4).as("bs"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    (0 until 4).foreach { t =>
-      val hof = e.select(col("vec_id"),
-        Similarity.hyperplaneBucket(col("embedding"), 64, 6, 42L + t * 7919).as("b"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      hof.foreach { case (id, b) => assert(native(id)(t) === b, s"table $t id $id") }
-    }
-  }
-
   test("IVF: train centroids, probe search, decent recall vs brute force") {
     val e = Tables.table(spark, TestSpark.sfDir, "embeddings")
     val cents = Similarity.trainIvfCentroids(e, nCentroids = 16, dim = 64, iterations = 1)
@@ -188,23 +166,15 @@ class SimilaritySpec extends AnyFunSuite {
       .select("query_id", "id").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val recall = exact.count { case (q, nn) => ivf.get(q).contains(nn) }.toDouble / exact.size
     assert(recall > 0.5, s"IVF top-1 recall $recall too low")
-    // portable training (hash init + integer mean updates) must hold
-    // equivalent recall — quantization moves centroids < 2^-20 per entry
-    val pc = Similarity.trainIvfCentroids(e, 16, dim = 64, iterations = 1, portable = true)
-    val pIvf = Similarity.ivfTopK(e, e, k = 1, pc, nProbe = 4, portable = true)
-      .select("query_id", "id").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val pRecall = exact.count { case (q, nn) =>
-      pIvf.get(q).contains(nn) }.toDouble / exact.size
-    assert(pRecall > 0.5, s"portable IVF top-1 recall $pRecall too low")
   }
 
   test("PQ: codebooks shaped m x ksub x dsub, codes in range, decent recall") {
     val e = Tables.table(spark, TestSpark.sfDir, "embeddings")
     val cbs = Similarity.trainPqCodebooks(e, m = 8, ksub = 16, dim = 64,
-      iterations = 1, portable = true)
+      iterations = 1)
     assert(cbs.length === 8)
     cbs.foreach { cb => assert(cb.length <= 16); cb.foreach(cw => assert(cw.length === 8)) }
-    val codes = Similarity.pqEncode(e, cbs, portable = true)
+    val codes = Similarity.pqEncode(e, cbs)
     val codeRows = codes.collect()
     assert(codeRows.length === e.count())
     codeRows.foreach { r =>
@@ -215,7 +185,7 @@ class SimilaritySpec extends AnyFunSuite {
     val exact = Similarity.bruteForceTopK(e, e, k = 1)
       .select("query_id", "id").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val shortlist = Similarity.suggestedShortlist(e.count(), 1)
-    val pq = Similarity.pqTopKReranked(e, e, k = 1, cbs, shortlist, portable = true)
+    val pq = Similarity.pqTopKReranked(e, e, k = 1, cbs, shortlist)
       .select("query_id", "id").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(pq.size === exact.size)
     val recall = exact.count { case (q, nn) => pq.get(q).contains(nn) }.toDouble / exact.size
@@ -310,7 +280,7 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("native PqAdcTable matches the HOF table formulation") {
     val e = Tables.table(spark, TestSpark.sfDir, "embeddings").limit(30)
-    val cbs = Similarity.trainPqCodebooks(e, m = 8, ksub = 16, dim = 64, portable = true)
+    val cbs = Similarity.trainPqCodebooks(e, m = 8, ksub = 16, dim = 64)
     val (cbQ, _) = Similarity.quantizedCodebook(cbs)
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => r.getLong(0) -> r.getSeq[Long](1)).sortBy(_._1).toSeq
@@ -368,8 +338,8 @@ class SimilaritySpec extends AnyFunSuite {
     val bf = Similarity.bruteForceTopK(e, e, k = 1)
       .select(col("query_id"), col("id").as("nn_id"))
     val cents = Similarity.trainIvfCentroids(e,
-      Similarity.suggestedCentroids(e.count()), 64, 1, portable = true)
-    val ivf = Similarity.ivfTopK(e, e, 1, cents, nProbe = 4, portable = true)
+      Similarity.suggestedCentroids(e.count()), 64, 1)
+    val ivf = Similarity.ivfTopK(e, e, 1, cents, nProbe = 4)
       .select(col("query_id"), col("id").as("nn_id"))
     val rep = Similarity.recallReport(bf, ivf).head()
     assert(rep.getAs[Long]("n_truth") > 0L)
@@ -433,8 +403,8 @@ class SimilaritySpec extends AnyFunSuite {
   test("centroidPrototypicality matches a JVM nearest-centroid replay") {
     val e = Tables.table(spark, TestSpark.sfDir, "embeddings").limit(150)
     val cents = Similarity.trainIvfCentroids(e,
-      nCentroids = 8, dim = 64, iterations = 1, portable = true)
-    val got = Similarity.centroidPrototypicality(e, cents, portable = true)
+      nCentroids = 8, dim = 64, iterations = 1)
+    val got = Similarity.centroidPrototypicality(e, cents)
       .collect().map(r => r.getLong(0) -> (r.getInt(1), r.getLong(2))).toMap
     // independent JVM replay: double-precision cosine to every centroid,
     // argmax with ties to the smallest cell, micro-floored score
@@ -453,10 +423,6 @@ class SimilaritySpec extends AnyFunSuite {
       val micro = math.floor(sims(best) * 1e6).toLong
       assert(got(id) === ((best, micro)), s"vec $id diverged from JVM replay")
     }
-    // non-portable (reciprocal-norm) mode must agree on tie-free data
-    val fast = Similarity.centroidPrototypicality(e, cents)
-      .collect().map(r => r.getLong(0) -> (r.getInt(1), r.getLong(2))).toMap
-    assert(fast === got, "portable and default assignment modes diverged")
     // empty centroid set is loud
     assert(intercept[IllegalArgumentException] {
       Similarity.centroidPrototypicality(e, Array.empty[Array[Float]])

@@ -378,7 +378,7 @@ class StreamingSpec extends AnyFunSuite {
     val stream = spark.readStream.schema(spark.read.parquet(dir).schema)
       .parquet(dir)
     val q = DocStreams.nearDupGateStream(stream, corpus, threshold = 0.5,
-        portable = true, watermarkSeconds = Some(7200))
+        watermarkSeconds = Some(7200))
       .writeStream.outputMode("append").format("memory")
       .queryName("ndgate").start()
     try {
@@ -389,14 +389,14 @@ class StreamingSpec extends AnyFunSuite {
         "gate must emit each flagged id exactly once")
       // ground truth: the batch cross-dedup operator's flagged deltas
       val crossIds = graft.operators.Dedup.minhashNearDupPairsCross(
-          delta, corpus, "doc_id", "text", threshold = 0.5, portable = true)
+          delta, corpus, "doc_id", "text", threshold = 0.5)
         .select("delta_id").distinct().collect().map(_.getLong(0)).toSet
       assert(crossIds.nonEmpty, "fixture must contain cross near-dups")
       assert(streamed.toSet === crossIds)
       // one definition, both modes: the SAME gate run as a batch job
       // lands on the identical flag set
       val batchTwin = DocStreams.nearDupGateStream(delta, corpus,
-          threshold = 0.5, portable = true)
+          threshold = 0.5)
         .select("id").collect().map(_.getLong(0)).toSet
       assert(batchTwin === crossIds)
     } finally q.stop()
@@ -985,8 +985,7 @@ class StreamingSpec extends AnyFunSuite {
     spark.catalog.listTables().collect().map(_.name)
       .filter(_.startsWith(prefix))
       .foreach(graft.operators.Bucketing.dropTableAndLocation(spark, _))
-    NearDupIndex.buildNearDupIndex(base, "doc_id", "text", prefix,
-      portable = true)
+    NearDupIndex.buildNearDupIndex(base, "doc_id", "text", prefix)
     val src = java.nio.file.Files.createTempDirectory("graft-ndmnt").toString
     arriving.repartition(3).write.mode("overwrite").parquet(src)
     val schema = spark.read.parquet(src).schema
@@ -1006,7 +1005,7 @@ class StreamingSpec extends AnyFunSuite {
     val got = rows(NearDupIndex.gateNearDups(spark, prefix, probes,
       "doc_id", "text", threshold = 0.5))
     val want = rows(Dedup.minhashNearDupPairsCross(probes, docs,
-      "doc_id", "text", threshold = 0.5, portable = true))
+      "doc_id", "text", threshold = 0.5))
     assert(want.nonEmpty && got === want,
       "streamed near-dup index diverged from the inline cross")
     // a replayed batch id is a ledger-only no-op
@@ -1029,7 +1028,7 @@ class StreamingSpec extends AnyFunSuite {
       .filter(_.startsWith(prefix))
       .foreach(graft.operators.Bucketing.dropTableAndLocation(spark, _))
     ClusterIndex.buildClusterIndex(base, "doc_id", "text", prefix,
-      threshold = 0.5, portable = true)
+      threshold = 0.5)
     val src = java.nio.file.Files.createTempDirectory("graft-clmnt").toString
     arriving.repartition(3).write.mode("overwrite").parquet(src)
     val schema = spark.read.parquet(src).schema
@@ -1044,7 +1043,7 @@ class StreamingSpec extends AnyFunSuite {
     val got = ClusterIndex.resolvedMembers(spark, prefix)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val pairs = Dedup.minhashNearDupPairs(docs, "doc_id", "text",
-      threshold = 0.5, portable = true)
+      threshold = 0.5)
     val want = Dedup.connectedComponents(
         docs.select(col("doc_id").as("id")), pairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -1073,8 +1072,7 @@ class StreamingSpec extends AnyFunSuite {
     val base = Seq((1L, b1Text)).toDF("doc_id", "text")
     val ref = Seq((900L, refText)).toDF("doc_id", "text")
     DedupIndex.buildDedupIndex(base, "doc_id", "text", "igp_dd")
-    NearDupIndex.buildNearDupIndex(base, "doc_id", "text", "igp_nd",
-      portable = true)
+    NearDupIndex.buildNearDupIndex(base, "doc_id", "text", "igp_nd")
     val words = Bloom.buildBloomWords(ref, "text", mBits = 1 << 15,
       kHashes = 4, shingleW = 8)
     val admitDir = java.nio.file.Files.createTempDirectory("graft-igp").toString
@@ -1134,18 +1132,17 @@ class StreamingSpec extends AnyFunSuite {
     val base = emb.filter(col("vec_id") % 3 === 0)
     val arriving = emb.filter(col("vec_id") % 3 =!= 0)
     val cents = Similarity.trainIvfCentroids(base, nCentroids = 8, dim = 64,
-      iterations = 1, portable = true)
+      iterations = 1)
     val prefix = "sivf_mnt"
     spark.catalog.listTables().collect().map(_.name)
       .filter(_.startsWith(prefix))
       .foreach(graft.operators.Bucketing.dropTableAndLocation(spark, _))
-    IvfIndex.buildIvfIndex(base, "vec_id", "embedding", cents, prefix,
-      portable = true)
+    IvfIndex.buildIvfIndex(base, "vec_id", "embedding", cents, prefix)
     val src = java.nio.file.Files.createTempDirectory("graft-ivfsrc").toString
     arriving.repartition(3).write.mode("overwrite").parquet(src)
     val schema = spark.read.parquet(src).schema
     val m = new DocStreams.IvfIndexMaintainer(spark, prefix, "vec_id",
-      "embedding", cents, portable = true)
+      "embedding", cents)
     val q = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(src)
       .writeStream.foreachBatch(m.appendBatch _).start()
@@ -1153,12 +1150,11 @@ class StreamingSpec extends AnyFunSuite {
     // the maintained index answers identically to the inline run over
     // the full corpus with the same frozen centroids — micro-batch
     // boundaries are invisible (assignment rows are per-vector facts)
-    val want = Similarity.ivfTopK(emb, emb, k = 1, cents, nProbe = 4,
-        portable = true)
+    val want = Similarity.ivfTopK(emb, emb, k = 1, cents, nProbe = 4)
       .select(col("query_id"), col("id"), col("cos"))
       .orderBy(col("query_id")).collect()
     val got = IvfIndex.ivfTopKFromIndex(spark, prefix, emb, k = 1, cents,
-        nProbe = 4, portable = true)
+        nProbe = 4)
       .select(col("query_id"), col("id"), col("cos"))
       .orderBy(col("query_id")).collect()
     assert(want.nonEmpty && want.sameElements(got),
@@ -1175,7 +1171,7 @@ class StreamingSpec extends AnyFunSuite {
     // restart recovery is ledger-driven: a FRESH maintainer instance
     // (no in-memory state) skips the same replayed batch
     val m2 = new DocStreams.IvfIndexMaintainer(spark, prefix, "vec_id",
-      "embedding", cents, portable = true)
+      "embedding", cents)
     m2.appendBatch(spark.read.parquet(src).limit(7), 0L)
     assert(spark.table(s"${prefix}_assign").count() === rowsBefore,
       "restarted maintainer re-appended a ledgered batch")
@@ -1190,20 +1186,19 @@ class StreamingSpec extends AnyFunSuite {
     val base = emb.filter(col("vec_id") % 3 === 0)
     val arriving = emb.filter(col("vec_id") % 3 =!= 0)
     val cents = Similarity.trainIvfCentroids(base, nCentroids = 8, dim = 64,
-      iterations = 1, portable = true)
+      iterations = 1)
     val prefix = "sivf_rt"
     spark.catalog.listTables().collect().map(_.name)
       .filter(_.startsWith(prefix))
       .foreach(graft.operators.Bucketing.dropTableAndLocation(spark, _))
-    IvfIndex.buildIvfIndex(base, "vec_id", "embedding", cents, prefix,
-      portable = true)
+    IvfIndex.buildIvfIndex(base, "vec_id", "embedding", cents, prefix)
     val src = java.nio.file.Files.createTempDirectory("graft-ivfrt").toString
     arriving.repartition(3).write.mode("overwrite").parquet(src)
     val schema = spark.read.parquet(src).schema
     // retrain after every 3 appends: fires once, at the end of the
     // 3-file stream — the drift-policy hook exercised mid-pipeline
     val m = new DocStreams.IvfIndexMaintainer(spark, prefix, "vec_id",
-      "embedding", cents, portable = true, retrainEveryAppends = 3)
+      "embedding", cents, retrainEveryAppends = 3)
     val q = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(src)
       .writeStream.foreachBatch(m.appendBatch _).start()
@@ -1212,16 +1207,15 @@ class StreamingSpec extends AnyFunSuite {
     // the serving index now answers exactly like a one-shot rebuild
     // over the full corpus at fresh full-corpus-trained centroids
     val fresh = Similarity.trainIvfCentroids(emb, nCentroids = 8, dim = 64,
-      iterations = 1, portable = true)
+      iterations = 1)
     assert(IvfIndex.centroidFingerprint(m.servingCentroidSet) ===
       IvfIndex.centroidFingerprint(fresh),
       "mid-stream retrain diverged from fresh training over the union")
-    val want = Similarity.ivfTopK(emb, emb, k = 1, fresh, nProbe = 4,
-        portable = true)
+    val want = Similarity.ivfTopK(emb, emb, k = 1, fresh, nProbe = 4)
       .select(col("query_id"), col("id"), col("cos"))
       .orderBy(col("query_id")).collect()
     val got = IvfIndex.ivfTopKFromIndex(spark, m.servingPrefix, emb, k = 1,
-        m.servingCentroidSet, nProbe = 4, portable = true)
+        m.servingCentroidSet, nProbe = 4)
       .select(col("query_id"), col("id"), col("cos"))
       .orderBy(col("query_id")).collect()
     assert(want.nonEmpty && want.sameElements(got),
@@ -1231,12 +1225,11 @@ class StreamingSpec extends AnyFunSuite {
     val truth = Similarity.bruteForceTopK(emb, emb, k = 1)
       .select(col("query_id"), col("id").as("nn_id"))
     val after = IvfIndex.ivfTopKFromIndex(spark, m.servingPrefix, emb, k = 1,
-        m.servingCentroidSet, nProbe = 4, portable = true)
+        m.servingCentroidSet, nProbe = 4)
       .select(col("query_id"), col("id").as("nn_id"))
-    val freshIdx = IvfIndex.ivfIndexCached(emb, "vec_id", "embedding", fresh,
-      portable = true)
+    val freshIdx = IvfIndex.ivfIndexCached(emb, "vec_id", "embedding", fresh)
     val freshRun = IvfIndex.ivfTopKFromIndex(spark, freshIdx, emb, k = 1,
-        fresh, nProbe = 4, portable = true)
+        fresh, nProbe = 4)
       .select(col("query_id"), col("id").as("nn_id"))
     assert(Similarity.recallReport(truth, after).head() ===
       Similarity.recallReport(truth, freshRun).head(),
@@ -1977,8 +1970,7 @@ class StreamingSpec extends AnyFunSuite {
       TextAnalysis.trainBucketWeights(seed, "text", col("label"), 256), 256)
     val base = Seq((1L, A)).toDF("doc_id", "text")
     DedupIndex.buildDedupIndex(base, "doc_id", "text", "csp_dd")
-    NearDupIndex.buildNearDupIndex(base, "doc_id", "text", "csp_nd",
-      portable = true)
+    NearDupIndex.buildNearDupIndex(base, "doc_id", "text", "csp_nd")
     val admitDir = java.nio.file.Files.createTempDirectory("graft-csp").toString
     val pipe = new DocStreams.CurationStreamPipeline(spark, "csp_dd",
       "csp_nd", weights, threshold = 0.5, admitDir, "doc_id", "text")
@@ -2016,8 +2008,7 @@ class StreamingSpec extends AnyFunSuite {
     // ROW-EQUAL to the sequential per-batch replay of the SAME batch
     // operators over the same arrivals (fresh indexes, same base)
     DedupIndex.buildDedupIndex(base, "doc_id", "text", "csq_dd")
-    NearDupIndex.buildNearDupIndex(base, "doc_id", "text", "csq_nd",
-      portable = true)
+    NearDupIndex.buildNearDupIndex(base, "doc_id", "text", "csq_nd")
     var expected = Seq.empty[Long]
     batches.foreach { rows =>
       val batch = rows.toDF("doc_id", "text")
