@@ -149,6 +149,27 @@ class DedupSpec extends AnyFunSuite {
     assert(pairs === Set((10L, 1L), (11L, 1L)))
   }
 
+  test("lshBucketsPoly folds each band's signature rows into one bucket mod 1e9+7") {
+    val docs = Tables.table(spark, TestSpark.sfDir, "documents").limit(50)
+    val (bands, rows) = (4, 3)
+    val sig = Dedup.minhashSignature(
+      graft.functions.NativeFunctions.polyShingleHashes(Dedup.tokens(col("text")), 3),
+      bands * rows)
+    val out = docs.select(sig.as("sig"), Dedup.lshBucketsPoly(sig, bands, rows).as("bk"))
+      .collect()
+    assert(out.length === 50)
+    out.foreach { r =>
+      val s = r.getSeq[Long](0)
+      assert(s.length === bands * rows)
+      val want = (0 until bands).map { b =>
+        (b, s.slice(b * rows, (b + 1) * rows)
+          .foldLeft(0L)((acc, x) => (acc * 1000003L + x) % 1000000007L))
+      }
+      val got = r.getSeq[org.apache.spark.sql.Row](1).map(x => (x.getInt(0), x.getLong(1)))
+      assert(got === want)
+    }
+  }
+
   test("polyShingleHashes matches the HOF twin (distinct poly hash per shingle)") {
     val docs = Tables.table(spark, TestSpark.sfDir, "documents")
     val both = docs.select(

@@ -156,6 +156,38 @@ class SimilaritySpec extends AnyFunSuite {
     assert(b1 === b2)
   }
 
+  test("native RademacherBuckets match a JVM replay of the signed integer projections") {
+    val e = Tables.table(spark, TestSpark.sfDir, "embeddings").limit(30)
+      .select(col("vec_id"), col("embedding"))
+    val (dim, numPlanes, tables) = (64, 6, 4)
+    val rows = e.select(col("vec_id"), col("embedding"),
+      graft.functions.NativeFunctions.rademacherBuckets(col("embedding"), dim, numPlanes,
+        tables).as("bs"))
+      .collect()
+    assert(rows.length === 30)
+    // plane sign for entry i of plane (t, p): parity of an affine index
+    // mixed by two squarings mod 1e9+7; projections are sums of
+    // floor(x * 2^20), so the bucket bits are exact in every engine
+    def sign(t: Int, p: Int, i: Int): Long = {
+      val idx = (t.toLong * numPlanes + p) * dim + i
+      val h0 = (idx + 12345L) % 1000000007L
+      val h1 = (h0 * h0 % 1000000007L * 1000003L + 54321L) % 1000000007L
+      if (h1 * h1 % 1000000007L % 2 == 0) 1L else -1L
+    }
+    rows.foreach { r =>
+      val q = r.getSeq[Float](1).take(dim).map(x => math.floor(x.toDouble * 1048576.0).toLong)
+      val want = (0 until tables).map { t =>
+        (0 until numPlanes).foldLeft(0L) { (b, p) =>
+          val proj = q.indices.map(i => sign(t, p, i) * q(i)).sum
+          if (proj >= 0) b | (1L << p) else b
+        }
+      }
+      assert(r.getSeq[Long](2) === want, s"vec ${r.getLong(0)}")
+    }
+    // distinct tables draw distinct planes: the buckets are not all equal
+    assert(rows.exists(r => r.getSeq[Long](2).distinct.size > 1))
+  }
+
   test("IVF: train centroids, probe search, decent recall vs brute force") {
     val e = Tables.table(spark, TestSpark.sfDir, "embeddings")
     val cents = Similarity.trainIvfCentroids(e, nCentroids = 16, dim = 64, iterations = 1)
