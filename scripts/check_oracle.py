@@ -4,16 +4,22 @@
 Usage: check_oracle.py <sfDir> <verifyOutDir>
 Registers each parquet table as a DuckDB view, runs every oracle SQL
 from oracle_sql.json, and compares (schema-name-sorted, row-sorted)
-values against the Spark parquet output.
+values against the Spark parquet output. Each query gets a fresh
+in-memory database, so one query's failure (an out-of-memory error
+leaves DuckDB unable to pin blocks, an error leaves a transaction
+aborted) cannot fail the queries after it.
 """
 import sys, json, glob, math
 import duckdb
 
 sfdir, outdir = sys.argv[1], sys.argv[2]
-con = duckdb.connect()
-for t in ["region","nation","customer","supplier","part","orders","lineitem",
-          "events","documents","embeddings"]:
-    con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sfdir}/{t}.parquet'")
+
+def connect():
+    con = duckdb.connect()
+    for t in ["region","nation","customer","supplier","part","orders","lineitem",
+              "events","documents","embeddings"]:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sfdir}/{t}.parquet'")
+    return con
 
 oracle = json.load(open(f"{outdir}/oracle_sql.json"))
 fails, passes, skipped = [], [], []
@@ -24,9 +30,11 @@ for q in oracle:
         fails.append((q, "NO OUTPUT WRITTEN (query failed in Verify)"))
 for name in sorted(glob.glob(f"{outdir}/*/")):
     q = name.rstrip("/").split("/")[-1]
+    con = connect()
     if q not in oracle:
         n = con.execute(f"SELECT count(*) FROM '{name}/*.parquet'").fetchone()[0]
         skipped.append((q, n))
+        con.close()
         continue
     try:
         # arrow-level TYPE check first: DuckDB SUM(BIGINT) returns HUGEINT
@@ -84,6 +92,8 @@ for name in sorted(glob.glob(f"{outdir}/*/")):
             passes.append(q)
     except Exception as e:
         fails.append((q, f"oracle error: {e}"))
+    finally:
+        con.close()
 
 print(f"PASS ({len(passes)}):", " ".join(passes))
 print(f"ROWS-ONLY ({len(skipped)}):", " ".join(f"{q}={n}" for q, n in skipped))

@@ -59,42 +59,19 @@ object Bloom {
     */
   def buildBloomWords(ref: DataFrame, textCol: String, mBits: Int,
                       kHashes: Int, shingleW: Int): Array[Long] = {
-    val sh = ref.select(explode(NativeFunctions.polyShingleHashes(
-      Dedup.tokens(col(textCol)), shingleW)).as("h"))
-    buildWordsFromHashes(sh, mBits, kHashes,
-      "bloom build: reference corpus has no shingles")
-  }
-
-  /** Shared bit-array fold: explode each hash's k positions, OR per
-    * 64-bit word (one map-side-combined aggregate over ≤ mBits/64
-    * groups), collect the packed words. `hashes` needs one bigint
-    * column `h`.
-    */
-  private def buildWordsFromHashes(hashes: DataFrame, mBits: Int,
-                                   kHashes: Int, emptyMsg: String): Array[Long] = {
     checkParams(mBits, kHashes)
-    val rows = hashes
+    val rows = ref.select(explode(NativeFunctions.polyShingleHashes(
+        Dedup.tokens(col(textCol)), shingleW)).as("h"))
       .select(explode(array(posColumns(col("h"), mBits, kHashes): _*)).as("pos"))
       .select(shiftright(col("pos"), 6).as("w"),
         call_function("shiftleft", lit(1L), pmod(col("pos"), lit(64L)).cast("int")).as("bit"))
       .groupBy("w").agg(bit_or(col("bit")).as("bits"))
       .collect()
-    require(rows.nonEmpty, emptyMsg)
+    require(rows.nonEmpty, "bloom build: reference corpus has no shingles")
     val words = new Array[Long](mBits / 64)
     rows.foreach(r => words(r.getLong(0).toInt) = r.getLong(1))
     words
   }
-
-  /** Bloom bit array over a LONG key column — the membership digest
-    * of an id SET (e.g. every doc_id in an index segment), mBits/8
-    * bytes however many keys it summarizes. The key itself is the
-    * hash fed to the shared position mixer, so probes replay
-    * externally like every other sketch here.
-    */
-  def buildLongKeyBloom(keys: DataFrame, keyCol: String, mBits: Int,
-                        kHashes: Int): Array[Long] =
-    buildWordsFromHashes(keys.select(col(keyCol).cast("long").as("h")),
-      mBits, kHashes, "bloom build: key set is empty")
 
   // ---- BLOCKED, PARTITIONED long-key digest ----------------------
   //

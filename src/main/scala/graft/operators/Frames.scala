@@ -840,23 +840,23 @@ object Frames {
     df.withColumn(outCol, assigned)
   }
 
-  /** Soft row cap: if over `n`, log a warning and either sample n or
-    * head n (polars_utils.py:83-100 `limit` + LimitWarning). Eager
-    * count, same as the reference's len() check.
+  /** Soft row cap: if over `n`, log a warning and take a seeded
+    * sample of n (polars_utils.py:83-100 `limit` + LimitWarning), with
+    * the seed [[printRdfStatements]] uses. Eager count, same as the
+    * reference's len() check.
     */
-  def limitWithWarning(df: DataFrame, n: Int = 250, sample: Boolean = true,
-                       seed: Long = 42L, idCol: Option[String] = None): DataFrame = {
+  def limitWithWarning(df: DataFrame, n: Int = 250,
+                       idCol: Option[String] = None): DataFrame = {
     val total = df.count()
     if (total <= n) df
     else {
-      Actions.warn(s"result has $total rows, capping to $n" +
-        (if (sample) " (sampled)" else ""), Actions.LimitWarning)
-      if (sample) idCol match {
+      Actions.warn(s"result has $total rows, capping to $n (sampled)", Actions.LimitWarning)
+      idCol match {
         // with a unique id the sample key is the portable hash, so an
         // external oracle reproduces the sampled rows
-        case Some(id) => sampleExactPortable(df, n, seed, id)
-        case None => sampleExact(df, n, seed)
-      } else df.limit(n)
+        case Some(id) => sampleExactPortable(df, n, 42L, id)
+        case None => sampleExact(df, n, 42L)
+      }
     }
   }
 

@@ -120,7 +120,7 @@ object Http {
   def responseText(response: Column): Column =
     response.getField("data").cast(StringType).as("response_text")
 
-  /** Execute the requests in `requestCol`, appending `responseCol`.
+  /** Execute the requests in `requestCol`, appending `response`.
     *
     * Mirrors the reference's batch loop (polars_requests.py:90-170):
     * one transport session, sequential ordered loop, per-request
@@ -132,10 +132,9 @@ object Http {
     * so it is closed on success and on failure alike.
     */
   def request(df: DataFrame, requestCol: String, opts: Options,
-              transport: Transport = JdkTransport,
-              responseCol: String = "response"): DataFrame = {
+              transport: Transport = JdkTransport): DataFrame = {
     val reqIdx = df.schema.fieldIndex(requestCol)
-    val outSchema = df.schema.add(StructField(responseCol, ResponseType))
+    val outSchema = df.schema.add(StructField("response", ResponseType))
     val o = opts
     df.repartition(1).mapPartitions { rows =>
       log.info(s"::group::${o.logGroup}")

@@ -1,7 +1,11 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.{DataFrame, GraftSqlShims, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.csv.{CSVHeaderChecker, CSVOptions, UnivocityParser}
+import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.StructType
 import org.slf4j.LoggerFactory
 
 import graft.operators.Http
@@ -11,9 +15,9 @@ import graft.util.Actions
   *
   * The reference sends exactly one query per frame, driver-side, and
   * parses the CSV reply against a declared schema; the Spark
-  * translation fetches on the driver at call time and parses with the
-  * distributed CSV reader over a one-element Dataset[String] per
-  * line. Retry: exponential backoff, <=30 tries, interval capped at
+  * translation fetches and parses on the driver at call time, and the
+  * rows become an RDD-backed frame (the leaf Spark's own readers
+  * build), so size estimates and plans stay those of a scan. Retry: exponential backoff, <=30 tries, interval capped at
   * 120s; WDQS embedded-timeout bodies are treated as timeouts and
   * retried; slow queries are logged (>5s) or warned (>45s).
   */
@@ -71,27 +75,27 @@ object Sparql {
     }
   }
 
-  /** Declared-schema SPARQL source. Columns-only form defaults every
-    * column to string (sparql.py:74-75). Header names are asserted
-    * against the schema (the reference maps by name).
+  /** Declared-schema SPARQL source (sparql.py:73-90): one pass of
+    * Spark's CSV record parser over the reply bytes, on the driver at
+    * call time. Header names are checked in order against the schema;
+    * an empty field reads as null; a value that does not parse fails
+    * the call; quoted fields may hold commas and newlines.
     */
-  def sparql(spark: SparkSession, query: String,
-             schema: StructType = null, columns: Seq[String] = Nil,
+  def sparql(spark: SparkSession, query: String, schema: StructType,
              fetch: Fetch): DataFrame = {
-    val st =
-      if (schema != null) schema
-      else {
-        require(columns.nonEmpty, "missing schema")
-        StructType(columns.map(c => StructField(c, StringType)))
-      }
-    val csv = new String(fetch(query), java.nio.charset.StandardCharsets.UTF_8)
-    val lines = csv.split("\r?\n", -1).toSeq.filter(_.nonEmpty)
-    require(lines.nonEmpty, "empty SPARQL response")
-    val header = lines.head.split(",").map(_.trim).toSeq
-    require(header == st.fields.map(_.name).toSeq,
-      s"SPARQL csv header $header does not match declared schema ${st.fieldNames.toSeq}")
-    import spark.implicits._
-    spark.read.schema(st).option("header", "true").option("mode", "FAILFAST")
-      .csv(spark.createDataset(lines))
+    val bytes = fetch(query)
+    require(bytes.exists(b => b != '\n' && b != '\r'), "empty SPARQL response")
+    val options = new CSVOptions(
+      Map("header" -> "true", "enforceSchema" -> "false", "multiLine" -> "true",
+        "mode" -> "FAILFAST"),
+      false, SQLConf.get.sessionLocalTimeZone)
+    val toUnsafe = UnsafeProjection.create(schema)
+    // the parser reuses its row object: the projection copies each one
+    val rows = GraftSqlShims.parseCsvStream(new java.io.ByteArrayInputStream(bytes),
+      new UnivocityParser(schema, options), new CSVHeaderChecker(schema, options, "SPARQL reply"),
+      schema).map(r => toUnsafe(r).copy(): InternalRow).toVector
+    val sc = spark.sparkContext
+    GraftSqlShims.rddFrame(spark,
+      sc.parallelize(rows, math.min(math.max(rows.size, 1), sc.defaultParallelism)), schema)
   }
 }

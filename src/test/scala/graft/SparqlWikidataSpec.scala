@@ -18,14 +18,6 @@ class SparqlWikidataSpec extends AnyFunSuite with BeforeAndAfterAll {
       |""".stripMargin
   private def fixtureFetch(csv: String): Sparql.Fetch = _ => csv.getBytes("UTF-8")
 
-  test("sparql: columns-only defaults to all-string schema (sparql.py:74-75)") {
-    val df = Sparql.sparql(spark, "SELECT ...", columns = Seq("item", "itemLabel"),
-      fetch = fixtureFetch(catsCsv))
-    assert(df.schema === StructType(Seq(
-      StructField("item", StringType), StructField("itemLabel", StringType))))
-    assert(df.count() === 2)
-  }
-
   test("sparql: declared schema types values; empty optionals parse as null") {
     val csv =
       """item,tvdb_id,tmdb_id
@@ -34,23 +26,55 @@ class SparqlWikidataSpec extends AnyFunSuite with BeforeAndAfterAll {
         |""".stripMargin
     val schema = StructType(Seq(StructField("item", StringType),
       StructField("tvdb_id", LongType), StructField("tmdb_id", LongType)))
-    val df = Sparql.sparql(spark, "q", schema, fetch = fixtureFetch(csv))
+    val df = Sparql.sparql(spark, "q", schema, fixtureFetch(csv))
     assert(df.schema === schema)  // schema known pre-collection
+    // an RDD-backed scan, as Spark's own readers build, not a LocalRelation
+    assert(df.queryExecution.optimizedPlan.collectLeaves().map(_.getClass.getSimpleName) ===
+      Seq("LogicalRDD"))
     val rows = df.orderBy("tvdb_id").collect()
     assert(rows(0).isNullAt(2) && rows(1).getLong(2) === 615L)
   }
 
-  test("sparql: header mismatch against declared schema fails fast") {
-    intercept[IllegalArgumentException] {
-      Sparql.sparql(spark, "q", columns = Seq("wrong", "names"),
-        fetch = fixtureFetch(catsCsv))
+  test("sparql: a value that does not parse fails the call") {
+    val schema = StructType(Seq(StructField("item", StringType), StructField("id", LongType)))
+    intercept[org.apache.spark.SparkException] {
+      Sparql.sparql(spark, "q", schema, fixtureFetch("item,id\nQ1,not-a-number\n"))
     }
   }
 
-  test("missing schema is rejected (sparql.py:76 assert)") {
+  private val catsSchema = StructType(Seq(
+    StructField("item", StringType), StructField("itemLabel", StringType)))
+
+  private def labels(csv: String): Seq[(String, String)] =
+    Sparql.sparql(spark, "q", catsSchema, fixtureFetch(csv)).orderBy("item").collect()
+      .map(r => (r.getString(0), r.getString(1))).toSeq
+
+  test("sparql: header mismatch against declared schema fails fast") {
+    val wrong = StructType(Seq(StructField("wrong", StringType), StructField("names", StringType)))
     intercept[IllegalArgumentException] {
-      Sparql.sparql(spark, "q", fetch = fixtureFetch(catsCsv))
+      Sparql.sparql(spark, "q", wrong, fixtureFetch(catsCsv))
     }
+  }
+
+  test("sparql: a quoted field keeps its newline and its comma as one value") {
+    val csv = "item,itemLabel\n" +
+      "http://www.wikidata.org/entity/Q1,\"Cat\nOne\"\n" +
+      "http://www.wikidata.org/entity/Q2,\"Cat, Two\"\n"
+    assert(labels(csv) === Seq(
+      "http://www.wikidata.org/entity/Q1" -> "Cat\nOne",
+      "http://www.wikidata.org/entity/Q2" -> "Cat, Two"))
+  }
+
+  test("sparql: CRLF and LF replies parse alike") {
+    assert(labels(catsCsv.replace("\n", "\r\n")) === labels(catsCsv))
+    assert(labels(catsCsv).map(_._2) === Seq("Cat One", "Cat Two"))
+  }
+
+  test("sparql: an empty reply fails; a header-only reply is an empty frame") {
+    intercept[IllegalArgumentException] {
+      Sparql.sparql(spark, "q", catsSchema, fixtureFetch(""))
+    }
+    assert(Sparql.sparql(spark, "q", catsSchema, fixtureFetch("item,itemLabel\r\n")).count() === 0)
   }
 
   test("blocklist: fetch via HTTP pipeline, extract Q-ids, explode, sort") {
