@@ -17,9 +17,10 @@ import graft.util.Actions
   * parses the CSV reply against a declared schema; the Spark
   * translation fetches and parses on the driver at call time, and the
   * rows become an RDD-backed frame (the leaf Spark's own readers
-  * build), so size estimates and plans stay those of a scan. Retry: exponential backoff, <=30 tries, interval capped at
-  * 120s; WDQS embedded-timeout bodies are treated as timeouts and
-  * retried; slow queries are logged (>5s) or warned (>45s).
+  * build), so size estimates and plans stay those of a scan. Retry:
+  * exponential backoff, <=30 tries, interval capped at 120s; WDQS
+  * embedded-timeout bodies are treated as timeouts and retried; slow
+  * queries are logged (>5s) or warned (>45s).
   */
 object Sparql {
 
